@@ -1,11 +1,10 @@
 package graft.sinks
 
-import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SaveMode}
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery}
-import org.apache.spark.sql.Row
 
 /** Sinks replacing the reference's serving/dimension stores with
   * lake-native equivalents.
@@ -57,20 +56,30 @@ object Sinks {
     * shape compaction assumes); crash recovery likewise assumes the
     * single writer.
     */
-  private final case class SwapDirs(fs: org.apache.hadoop.fs.FileSystem,
+  private final case class SwapDirs(fs: FileSystem,
       target: Path, staging: Path, retired: Path)
+
+  /** `path` resolved once against its OWN filesystem: the result keeps
+    * its scheme and authority (`s3a://b/state` stays on S3A, never the
+    * default filesystem) and has no trailing separator, so derived
+    * siblings and children land where the caller pointed.
+    */
+  private[graft] def qualified(spark: SparkSession,
+      path: String): (FileSystem, Path) = {
+    val p = new Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    (fs, fs.makeQualified(p))
+  }
 
   /** `write` stages the replacement into `dirs.staging` and returns
     * true to proceed with the swap, or false to leave the target
     * untouched (a no-op pass).
     */
-  private def withSwap(spark: org.apache.spark.sql.SparkSession, path: String,
+  private def withSwap(spark: SparkSession, path: String,
       suffix: String)(write: SwapDirs => Boolean): Unit = {
-    val fs = new Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // normalize away a trailing separator so staging/retired are
-    // SIBLINGS of the target, never children
-    val target = new Path(new Path(path).toUri.getPath)
+    // qualified: staging/retired are SIBLINGS of the target on the
+    // target's own filesystem, never children
+    val (fs, target) = qualified(spark, path)
     def sibling(tag: String) =
       new Path(Option(target.getParent).getOrElse(new Path("/")),
         target.getName + suffix + tag)
@@ -89,6 +98,104 @@ object Sinks {
       throw new java.io.IOException(s"swap failed for $target")
     }
     fs.delete(retired, true)
+  }
+
+  /** The replay-safe fold skeleton every stateful `foreachBatch` sink
+    * in graft runs on — the exactly-once-by-idempotent-replay sink of
+    * Structured Streaming. `step` sees each micro-batch with its batch
+    * id; the checkpoint at `checkpointDir` commits the id only after
+    * `step` returns, so a crash anywhere re-delivers the SAME id with
+    * the same rows, and the step must converge on replay. Steps that
+    * keep state do it through [[BatchState]], whose layout is what
+    * makes the replay a fixpoint:
+    *
+    *  - OVERWRITE BY BATCH ID: batch `id` writes `<part>/batch=<id>`
+    *    and nothing else, so a replay rewrites its own output instead
+    *    of appending a duplicate (a torn write is replaced whole);
+    *  - BASE READS `batch < id`: a step that pairs against earlier
+    *    state reads only strictly earlier batches, never its own
+    *    half-written copy ([[BatchState.before]]);
+    *  - VERSIONS PRUNED AFTER THE WRITE: a step that replaces its
+    *    state writes `<part>/v=<id>` first and only then deletes older
+    *    versions, so a crash between the two leaves the newest complete
+    *    version readable ([[BatchState.putVersion]] /
+    *    [[BatchState.latest]]);
+    *  - A MISSING DIRECTORY READS AS `None`: a readout before the first
+    *    batch is "no state yet", never an error ([[BatchState.read]]).
+    *
+    * The skeleton runs no Spark action of its own: whether a step
+    * probes `isEmpty`, what it persists, and how it retries are the
+    * step's policy, because they set its Spark jobs per batch.
+    */
+  private[graft] def foldSink(df: DataFrame, checkpointDir: String)(
+      step: (DataFrame, Long) => Unit): DataStreamWriter[Row] =
+    df.writeStream
+      .option("checkpointLocation", checkpointDir)
+      .foreachBatch(step)
+
+  /** The on-disk layout under one fold sink's `statePath` — see
+    * [[foldSink]] for the replay contract it implements. The root and
+    * its filesystem are resolved once ([[qualified]]); every `part` is
+    * a subtree of that root.
+    */
+  private[graft] final case class BatchState(spark: SparkSession,
+      statePath: String) {
+    private val (fs, root) = qualified(spark, statePath)
+
+    private def dir(part: String): Path = new Path(root, part)
+
+    /** Overwrite `<part>/batch=<batchId>` with `df`. */
+    def put(part: String, batchId: Long, df: DataFrame): Unit =
+      df.write.mode(SaveMode.Overwrite)
+        .parquet(new Path(dir(part), s"batch=$batchId").toString)
+
+    /** `<part>`'s location, None while nothing has been written there. */
+    def find(part: String): Option[String] =
+      Some(dir(part)).filter(fs.exists).map(_.toString)
+
+    /** Every landed batch of `<part>` (partition discovery adds the
+      * `batch` column); None while nothing has been written there.
+      */
+    def read(part: String): Option[DataFrame] =
+      find(part).map(spark.read.parquet(_))
+
+    /** The base batch `batchId` pairs against: `<part>`'s batches
+      * strictly before it.
+      */
+    def before(part: String, batchId: Long): Option[DataFrame] =
+      read(part).map(_.where(col("batch") < batchId))
+
+    /** Write `<part>/v=<batchId>`, then prune the older versions. */
+    def putVersion(part: String, batchId: Long, df: DataFrame): Unit = {
+      df.write.mode(SaveMode.Overwrite)
+        .parquet(new Path(dir(part), s"v=$batchId").toString)
+      versions(part).filter(_._1 < batchId)
+        .foreach { case (_, p) => fs.delete(p, true) }
+    }
+
+    /** The newest `<part>/v=<id>` version; None before the first. */
+    def latest(part: String): Option[DataFrame] =
+      versions(part).sortBy(_._1).lastOption
+        .map { case (_, p) => spark.read.parquet(p.toString) }
+
+    private def versions(part: String): Seq[(Long, Path)] =
+      if (!fs.exists(dir(part))) Nil
+      else fs.listStatus(dir(part)).toSeq.filter(_.isDirectory).flatMap { s =>
+        val n = s.getPath.getName
+        if (n.startsWith("v=")) n.drop(2).toLongOption.map(_ -> s.getPath)
+        else None
+      }
+  }
+
+  private[graft] object BatchState {
+    /** Partition discovery adds a `batch` column to every read of a
+      * `batch=<id>` store, so a data column of that name collides.
+      */
+    def requireNoBatchColumn(sink: String, cols: String*): Unit =
+      require(!cols.contains("batch"),
+        s"$sink stores state under batch=<id> partitions; a column " +
+          "named 'batch' would collide with partition discovery — " +
+          "rename it first")
   }
 
   /** Keyed upsert: merge `batch` into the snapshot at `path`, keeping
@@ -120,11 +227,8 @@ object Sinks {
     */
   def dimUpsertSink(df: DataFrame, path: String, checkpointDir: String,
       keys: Seq[String], versionCol: String): DataStreamWriter[Row] =
-    df.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        upsert(batch, path, keys, versionCol)
-      }
+    foldSink(df, checkpointDir)((batch, _) =>
+      upsert(batch, path, keys, versionCol))
 
   /** #81 — bucketed CDC upsert: merge a change batch (insert / update /
     * delete ops) into a hash-bucketed parquet table, rewriting ONLY the
@@ -172,8 +276,7 @@ object Sinks {
     require(!batch.columns.contains("bucket"),
       "cdcApply reserves the column name 'bucket' for the table layout")
     val spark = batch.sparkSession
-    val root = new Path(new Path(path).toUri.getPath)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val (fs, root) = qualified(spark, path)
     val n = ensureBuckets(fs, root, numBuckets)
     val keyCols = keys.map(col)
     val routed = batch.withColumn("bucket", pmod(hash(keyCols: _*), lit(n)))
@@ -221,7 +324,7 @@ object Sinks {
   }
 
   /** The current table state: all buckets, minus the layout column. */
-  def cdcSnapshot(spark: org.apache.spark.sql.SparkSession,
+  def cdcSnapshot(spark: SparkSession,
       path: String): DataFrame =
     spark.read.parquet(path).drop("bucket")
 
@@ -234,17 +337,14 @@ object Sinks {
   def cdcApplySink(df: DataFrame, path: String, checkpointDir: String,
       keys: Seq[String], versionCol: String, opCol: String = "op",
       numBuckets: Int = 64): DataStreamWriter[Row] =
-    df.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        cdcApply(batch, path, keys, versionCol, opCol, numBuckets)
-      }
+    foldSink(df, checkpointDir)((batch, _) =>
+      cdcApply(batch, path, keys, versionCol, opCol, numBuckets))
 
   /** Pin (or validate) the table's bucket count in a `_graft_buckets`
     * marker at the root — underscore-named so Spark's file index skips
     * it.
     */
-  private def ensureBuckets(fs: org.apache.hadoop.fs.FileSystem,
+  private def ensureBuckets(fs: FileSystem,
       root: Path, requested: Int): Int = {
     val marker = new Path(root, "_graft_buckets")
     if (fs.exists(marker)) {
@@ -300,12 +400,11 @@ object Sinks {
     * are parameters because the right thresholds are a function of
     * the store's read cadence, not universal constants.
     */
-  def storeStats(spark: org.apache.spark.sql.SparkSession, path: String,
+  def storeStats(spark: SparkSession, path: String,
       smallFileBytes: Long = 8L * 1024 * 1024, minFiles: Int = 16,
       smallFrac: Double = 0.5): DataFrame = {
     import spark.implicits._
-    val root = new Path(new Path(path).toUri.getPath)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val (fs, root) = qualified(spark, path)
     val subtrees: Seq[(String, Path)] =
       if (!fs.exists(root)) Seq.empty
       else {
@@ -329,8 +428,8 @@ object Sinks {
           if (f.getLen < smallFileBytes) nSmall += 1
         }
       }
-      // batch partitions one level down (the overwrite-by-batch-id
-      // store layout every replay-safe sink here uses)
+      // batch partitions one level down (the [[BatchState]] layout
+      // every fold sink uses)
       if (name != ".")
         nBatches = fs.listStatus(p)
           .count(s => s.isDirectory && s.getPath.getName.startsWith("batch="))
@@ -345,7 +444,7 @@ object Sinks {
       .orderBy("subtree")
   }
 
-  def compactParquet(spark: org.apache.spark.sql.SparkSession, path: String,
+  def compactParquet(spark: SparkSession, path: String,
       targetBytes: Long = 128L * 1024 * 1024): (Int, Int) = {
     require(targetBytes > 0, s"targetBytes must be positive, got $targetBytes")
     var before = 0

@@ -1,8 +1,11 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState,
+  GroupStateTimeout, OutputMode}
+import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
+import graft.sinks.Sinks.{BatchState, foldSink}
 
 /** A behavior-log event as seen by the streaming layer (`ts` is the
   * event-time column watermarks attach to; `ts_us` the epoch-micros
@@ -87,24 +90,21 @@ object Streams {
 
   /** Multi-sink side of #16: one parquet dir per route (the side-output
     * pattern — dirty records get a dead-letter sink instead of being
-    * dropped, BaseLogApp.java:32-45). Each route write lands in a
-    * batch-id-scoped subdirectory with overwrite semantics, so a
-    * replayed micro-batch (crash before checkpoint commit) rewrites the
-    * same directories instead of appending duplicates — idempotent
+    * dropped, BaseLogApp.java:32-45), each route a `route=<r>` part of
+    * the [[graft.sinks.Sinks.foldSink]] layout under `outDir` — a
+    * replayed micro-batch rewrites its own directories, idempotent
     * without a transactional sink.
     */
-  def writeRouted(routed: DataFrame, outDir: String, checkpointDir: String) =
-    routed.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .outputMode(OutputMode.Append)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        batch.persist()
-        Seq("page", "start", "dirty").foreach { r =>
-          batch.filter(col("route") === r)
-            .write.mode("overwrite").parquet(s"$outDir/route=$r/batch=$batchId")
-        }
-        batch.unpersist(); ()
+  def writeRouted(routed: DataFrame, outDir: String,
+      checkpointDir: String): DataStreamWriter[Row] =
+    foldSink(routed, checkpointDir) { (batch, batchId) =>
+      val out = BatchState(batch.sparkSession, outDir)
+      batch.persist()
+      Seq("page", "start", "dirty").foreach { r =>
+        out.put(s"route=$r", batchId, batch.filter(col("route") === r))
       }
+      batch.unpersist(); ()
+    }
 
   /** #57 — BaseDBApp's CDC routing as a stream transform: the
     * reference applies the op-type rule IN-STREAM (BaseDBApp.java:
@@ -776,16 +776,12 @@ object Streams {
     * or re-clustering the whole corpus — the ingest-time form of the
     * batch `q_dup_clusters`/`q_dup_clusters_incremental` pipeline.
     *
-    * State layout under `statePath` (both writes keyed by batch id, so
-    * foreachBatch replays OVERWRITE their own output instead of
-    * duplicating — crash anywhere, replay converges):
-    *  - `corpus/batch=<id>/` — each ingested batch (the pair
-    *    generator's base side reads `batch < id`, so a replayed batch
-    *    never pairs against its own half-written copy);
-    *  - `labels/v=<id>/` — the labeling AFTER batch id; the latest
-    *    version is current, older ones are pruned after a successful
-    *    write. Re-merging a replayed batch is a fixpoint: its edges
-    *    contract to self-loops on the already-merged labeling.
+    * State under `statePath` ([[graft.sinks.Sinks.foldSink]] layout):
+    *  - `corpus/batch=<id>/` — each ingested batch, the pair
+    *    generator's base side;
+    *  - `labels/v=<id>/` — the labeling AFTER batch id. Re-merging a
+    *    replayed batch is a fixpoint: its edges contract to
+    *    self-loops on the already-merged labeling.
     *
     * With a finite `dfCap` the capped vocabulary is evaluated against
     * the corpus AS OF each batch (exactly like the gated
@@ -798,14 +794,9 @@ object Streams {
   def dupClusterSink(docs: DataFrame, statePath: String,
       checkpointDir: String, idCol: String = "doc_id",
       textCol: String = "text", n: Int = 3, tau: Double = 0.8,
-      dfCap: Int = Int.MaxValue)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyDupClusterBatch(batch, batchId, statePath, idCol, textCol,
-          n, tau, dfCap)
-      }
+      dfCap: Int = Int.MaxValue): DataStreamWriter[Row] =
+    foldSink(docs, checkpointDir)(applyDupClusterBatch(_, _, statePath,
+      idCol, textCol, n, tau, dfCap))
 
   /** One maintenance step of [[dupClusterSink]] (package-visible so the
     * spec can drive replay scenarios directly).
@@ -813,24 +804,16 @@ object Streams {
   private[graft] def applyDupClusterBatch(batch: DataFrame, batchId: Long,
       statePath: String, idCol: String, textCol: String, n: Int,
       tau: Double, dfCap: Int): Unit = {
-    import org.apache.hadoop.fs.Path
-    val spark = batch.sparkSession
-    val root = new Path(new Path(statePath).toUri.getPath)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val corpusRoot = new Path(root, "corpus")
-    val labelsRoot = new Path(root, "labels")
+    val st = BatchState(batch.sparkSession, statePath)
     val b = batch.select(col(idCol), col(textCol)).persist()
     try {
       if (b.isEmpty) return
-      val base =
-        if (fs.exists(corpusRoot))
-          spark.read.parquet(corpusRoot.toString)
-            .where(col("batch") < batchId).select(col(idCol), col(textCol))
-        else b.limit(0)
+      val base = st.before("corpus", batchId)
+        .map(_.select(col(idCol), col(textCol))).getOrElse(b.limit(0))
       val pairs = graft.api.Graft
         .incrementalDedupPairs(base, b, idCol, textCol, n, tau, dfCap)
         .select("id_new", "id_old")
-      val merged = latestLabels(spark, fs, labelsRoot) match {
+      val merged = st.latest("labels") match {
         case Some(lab) =>
           graft.api.Graft.mergeComponents(lab, pairs, "id_new", "id_old")
         case None =>
@@ -839,16 +822,8 @@ object Streams {
       // merged derives from labels/v=<prior> which the prune below
       // deletes — materialize before any state is touched
       val out = merged.localCheckpoint(true)
-      b.write.mode("overwrite")
-        .parquet(new Path(corpusRoot, s"batch=$batchId").toString)
-      out.write.mode("overwrite")
-        .parquet(new Path(labelsRoot, s"v=$batchId").toString)
-      fs.listStatus(labelsRoot)
-        .filter { s =>
-          val v = versionOf(s.getPath.getName)
-          s.isDirectory && v.exists(_ < batchId)
-        }
-        .foreach(s => fs.delete(s.getPath, true))
+      st.put("corpus", batchId, b)
+      st.putVersion("labels", batchId, out)
     } finally b.unpersist()
   }
 
@@ -862,11 +837,11 @@ object Streams {
     * Each non-empty batch: (1) the [[dupClusterSink]] maintenance step
     * VERBATIM (the shared code path — the two sinks cannot drift);
     * (2) the batch's #33 quality scores land map-side under
-    * `quality/batch=<id>` (overwrite-by-batchId = replay-safe);
-    * (3) keepers are re-elected from the latest labeling ⋈ the quality
-    * store with #129's struct-max — `(coalesce(score,−1), −id)` keys:
-    * NULL-scored docs lose, ties go to the smaller id — written to
-    * `keepers/v=<id>`, older versions pruned after the write.
+    * `quality/batch=<id>`; (3) keepers are re-elected from the latest
+    * labeling ⋈ the quality store with #129's struct-max —
+    * `(coalesce(score,−1), −id)` keys: NULL-scored docs lose, ties go
+    * to the smaller id — written to `keepers/v=<id>` (the
+    * [[graft.sinks.Sinks.foldSink]] layout).
     *
     * Replay (at-least-once foreachBatch) is a fixpoint on the CONSUMED
     * state: the cluster step contracts to self-loops on the merged
@@ -885,14 +860,9 @@ object Streams {
   def keeperQualitySink(docs: DataFrame, statePath: String,
       checkpointDir: String, idCol: String = "doc_id",
       textCol: String = "text", n: Int = 3, tau: Double = 0.8,
-      dfCap: Int = Int.MaxValue)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyKeeperQualityBatch(batch, batchId, statePath, idCol, textCol,
-          n, tau, dfCap)
-      }
+      dfCap: Int = Int.MaxValue): DataStreamWriter[Row] =
+    foldSink(docs, checkpointDir)(applyKeeperQualityBatch(_, _, statePath,
+      idCol, textCol, n, tau, dfCap))
 
   /** One maintenance step of [[keeperQualitySink]] (package-visible so
     * the spec can drive replay scenarios directly).
@@ -900,24 +870,17 @@ object Streams {
   private[graft] def applyKeeperQualityBatch(batch: DataFrame,
       batchId: Long, statePath: String, idCol: String, textCol: String,
       n: Int, tau: Double, dfCap: Int): Unit = {
-    import org.apache.hadoop.fs.Path
-    val spark = batch.sparkSession
     val b = batch.select(col(idCol).as("doc_id"), col(textCol).as("text"))
       .persist()
     try {
       if (b.isEmpty) return
       applyDupClusterBatch(b, batchId, statePath, "doc_id", "text",
         n, tau, dfCap)
-      val root = new Path(new Path(statePath).toUri.getPath)
-      val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val qualityRoot = new Path(root, "quality")
-      graft.operators.Text.withQuality(b)
-        .select(col("doc_id"), col("quality_score"))
-        .write.mode("overwrite")
-        .parquet(new Path(qualityRoot, s"batch=$batchId").toString)
-      val labels = latestLabels(spark, fs, new Path(root, "labels"))
-        .getOrElse(return)
-      val quality = spark.read.parquet(qualityRoot.toString)
+      val st = BatchState(batch.sparkSession, statePath)
+      st.put("quality", batchId, graft.operators.Text.withQuality(b)
+        .select(col("doc_id"), col("quality_score")))
+      val labels = st.latest("labels").getOrElse(return)
+      val quality = st.read("quality").get
         .select(col("doc_id"), col("quality_score"))
       val keepers = labels
         .join(quality, labels("id") === quality("doc_id"))
@@ -936,28 +899,16 @@ object Streams {
         // derives from labels/v=<prior> and the store this step also
         // mutates — materialize before touching keeper state
         .localCheckpoint(true)
-      val keepersRoot = new Path(root, "keepers")
-      keepers.write.mode("overwrite")
-        .parquet(new Path(keepersRoot, s"v=$batchId").toString)
-      fs.listStatus(keepersRoot)
-        .filter { s =>
-          val v = versionOf(s.getPath.getName)
-          s.isDirectory && v.exists(_ < batchId)
-        }
-        .foreach(s => fs.delete(s.getPath, true))
+      st.putVersion("keepers", batchId, keepers)
     } finally b.unpersist()
   }
 
   /** Latest keeper election maintained by [[keeperQualitySink]]
     * (None before the first non-empty batch).
     */
-  def keeperState(spark: org.apache.spark.sql.SparkSession,
-      statePath: String): Option[DataFrame] = {
-    import org.apache.hadoop.fs.Path
-    val root = new Path(new Path(statePath).toUri.getPath)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    latestLabels(spark, fs, new Path(root, "keepers"))
-  }
+  def keeperState(spark: SparkSession,
+      statePath: String): Option[DataFrame] =
+    BatchState(spark, statePath).latest("keepers")
 
   /** #105 — `stream_dedup_semantic`: per-micro-batch SemDeDup ingest
     * (the streaming twin of `q_dedup_semantic`/#103 via
@@ -967,15 +918,11 @@ object Streams {
     * refit, the same lambda-repair contract as `stream_dedup_exact`
     * and `dupClusterSink`'s capped vocabulary.
     *
-    * State layout under `statePath` (exactly-once by overwrite-by-
-    * batchId, the [[dupClusterSink]] scheme):
+    * State under `statePath` ([[graft.sinks.Sinks.foldSink]] layout):
     *  - `index/batch=<id>/` — the batch's cell assignments
-    *    `(id, cell, vec)`; the store side of every later ingest. The
-    *    base read takes `batch < id`, so a replayed batch never pairs
-    *    against its own half-written copy;
+    *    `(id, cell, vec)`; the store side of every later ingest;
     *  - `verdicts/batch=<id>/` — that batch's drop list
-    *    `(vec_id, cell, dup_of_ct, max_cos)`; replay overwrites the
-    *    same partition, so verdicts stay exactly-once downstream.
+    *    `(vec_id, cell, dup_of_ct, max_cos)`.
     *
     * Scale shape per ingest: the batch assigns cells via the
     * broadcast argmax, the store joins keyed on cell and is scanned
@@ -987,21 +934,16 @@ object Streams {
   def semanticDedupSink(vectors: DataFrame, centroids: DataFrame,
       statePath: String, checkpointDir: String,
       idCol: String = "vec_id", vecCol: String = "v",
-      tau: Double = 0.45)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    vectors.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applySemanticBatch(batch, batchId, centroids, statePath,
-          idCol, vecCol, tau)
-      }
+      tau: Double = 0.45): DataStreamWriter[Row] =
+    foldSink(vectors, checkpointDir)(applySemanticBatch(_, _, centroids,
+      statePath, idCol, vecCol, tau))
 
   /** #164's streaming twin — IVF index BALANCE maintained while
     * vectors ARRIVE: per batch, ONE cell-grain integer contraction
-    * `(cell, n)` lands replay-safely under `cells/batch=<id>`
-    * (overwrite-by-batchId — the [[domainStatsSink]] scheme), where
-    * `cell` is the batch's broadcast-argmax assignment against the
-    * FROZEN serving centroids ([[graft.api.Graft.ivfIndex]], the
+    * `(cell, n)` lands under `cells/batch=<id>` (the
+    * [[graft.sinks.Sinks.foldSink]] layout), where `cell` is the
+    * batch's broadcast-argmax assignment against the FROZEN serving
+    * centroids ([[graft.api.Graft.ivfIndex]], the
     * shared stage — ingest and the periodic batch #164 cannot
     * disagree about what cell a vector is in). Counts are
     * integer-additive under ANY batch split, so [[ivfBalanceState]]
@@ -1014,24 +956,17 @@ object Streams {
     */
   def ivfBalanceSink(vectors: DataFrame, centroids: DataFrame,
       statePath: String, checkpointDir: String,
-      idCol: String = "vec_id", vecCol: String = "v")
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    vectors.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyIvfBalanceBatch(batch, batchId, centroids, statePath,
-          idCol, vecCol)
-      }
+      idCol: String = "vec_id", vecCol: String = "v"): DataStreamWriter[Row] =
+    foldSink(vectors, checkpointDir)(applyIvfBalanceBatch(_, _, centroids,
+      statePath, idCol, vecCol))
 
   /** One maintenance step of [[ivfBalanceSink]] (package-visible so
     * the spec can drive replay directly). */
   private[graft] def applyIvfBalanceBatch(batch: DataFrame, batchId: Long,
       centroids: DataFrame, statePath: String, idCol: String,
       vecCol: String): Unit = {
-    import org.apache.hadoop.fs.Path
     val spark = batch.sparkSession
     graft.functions.CosineSimilarity.register(spark)
-    val root = new Path(new Path(statePath).toUri.getPath)
     if (batch.isEmpty) return
     // usable-vector filter, the #161/validateEmbeddings convention the
     // batch #164 readout states: a vector with no defined cosine
@@ -1052,26 +987,20 @@ object Streams {
       .where(!exists(v, x => x.isNull) &&
         call_function("cosine_sim", v,
           array(cv0.map(lit): _*)).isNotNull)
-    graft.api.Graft.ivfIndex(usable,
-        idCol, vecCol, centroids, "cent_id", "cv")
-      .groupBy("cell").agg(count(lit(1)).as("n"))
-      .write.mode("overwrite")
-      .parquet(new Path(root, s"cells/batch=$batchId").toString)
+    BatchState(spark, statePath).put("cells", batchId,
+      graft.api.Graft.ivfIndex(usable,
+          idCol, vecCol, centroids, "cent_id", "cv")
+        .groupBy("cell").agg(count(lit(1)).as("n")))
   }
 
   /** The balance readout after the last completed batch —
     * column-for-column the batch `q_ivf_cell_balance` schema
     * `(cell, n_vecs, share)`. None before the first batch. */
-  def ivfBalanceState(spark: org.apache.spark.sql.SparkSession,
-      statePath: String): Option[DataFrame] = {
-    import org.apache.hadoop.fs.Path
-    val croot = new Path(new Path(statePath).toUri.getPath, "cells")
-    val fs = croot.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(croot)) return None
-    Some(graft.operators.Similarity.cellBalanceFromCounts(
-      spark.read.parquet(croot.toString)
-        .groupBy("cell").agg(sum("n").as("n_vecs"))))
-  }
+  def ivfBalanceState(spark: SparkSession,
+      statePath: String): Option[DataFrame] =
+    BatchState(spark, statePath).read("cells").map(cells =>
+      graft.operators.Similarity.cellBalanceFromCounts(
+        cells.groupBy("cell").agg(sum("n").as("n_vecs"))))
 
   /** #185 — `stream_dedup_winnow`: char-grain near-dup verdicts at
     * INGEST — each arriving batch winnow-fingerprints itself
@@ -1079,13 +1008,10 @@ object Streams {
     * pairs against the fingerprint store via the SAME
     * `incrementalPairsStored` machinery the word-shingle ingest
     * (#61) uses, so a reformatted copy of an already-stored document
-    * is flagged the moment it arrives. State layout under `statePath`
-    * (exactly-once by overwrite-by-batchId, the [[semanticDedupSink]]
-    * scheme):
+    * is flagged the moment it arrives. State under `statePath` (the
+    * [[graft.sinks.Sinks.foldSink]] layout):
     *  - `index/batch=<id>/` — the batch's `(id, shingle)` winnow
-    *    index rows; the store side of every later ingest (base reads
-    *    `batch < id`, so a replayed batch never pairs against its own
-    *    half-written copy);
+    *    index rows; the store side of every later ingest;
     *  - `verdicts/batch=<id>/` — that batch's near-dup pairs
     *    `(id_new, id_old, inter, jaccard)` against the store and
     *    within-batch smaller ids.
@@ -1124,54 +1050,36 @@ object Streams {
       w: Int = graft.operators.Dedup.WinnowW,
       tau: Double = graft.operators.Dedup.WinnowTau,
       dfCap: Int = graft.operators.Dedup.WinnowDfCap.toInt)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyWinnowBatch(batch, batchId, statePath, idCol, textCol,
-          k, w, tau, dfCap)
-      }
+      : DataStreamWriter[Row] =
+    foldSink(docs, checkpointDir)(applyWinnowBatch(_, _, statePath, idCol,
+      textCol, k, w, tau, dfCap))
 
   /** One ingest step of [[winnowDedupSink]] (package-visible so the
     * spec can drive replay directly). */
   private[graft] def applyWinnowBatch(batch: DataFrame, batchId: Long,
       statePath: String, idCol: String, textCol: String, k: Int,
       w: Int, tau: Double, dfCap: Int): Unit = {
-    import org.apache.hadoop.fs.Path
-    val spark = batch.sparkSession
-    val root = new Path(new Path(statePath).toUri.getPath)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val indexRoot = new Path(root, "index")
+    val st = BatchState(batch.sparkSession, statePath)
     if (batch.isEmpty) return
     val bIdx = graft.api.Graft
       .winnowIndex(batch.select(col(idCol), col(textCol)), idCol, textCol, k, w)
       .localCheckpoint(true)
-    val base =
-      if (fs.exists(indexRoot))
-        spark.read.parquet(indexRoot.toString)
-          .where(col("batch") < batchId).select("id", "shingle")
-      else bIdx.limit(0)
+    val base = st.before("index", batchId)
+      .map(_.select("id", "shingle")).getOrElse(bIdx.limit(0))
     val verdicts = graft.api.Graft
       .incrementalDedupPairsIndexed(base, bIdx, tau, dfCap)
       .localCheckpoint(true)
-    bIdx.write.mode("overwrite")
-      .parquet(new Path(indexRoot, s"batch=$batchId").toString)
-    verdicts.write.mode("overwrite")
-      .parquet(new Path(root, s"verdicts/batch=$batchId").toString)
+    st.put("index", batchId, bIdx)
+    st.put("verdicts", batchId, verdicts)
   }
 
   /** Every near-dup verdict delivered so far — `(id_new, id_old,
     * inter, jaccard)` across all completed batches. None before the
     * first batch. */
-  def winnowVerdicts(spark: org.apache.spark.sql.SparkSession,
-      statePath: String): Option[DataFrame] = {
-    import org.apache.hadoop.fs.Path
-    val vroot = new Path(new Path(statePath).toUri.getPath, "verdicts")
-    val fs = vroot.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(vroot)) return None
-    Some(spark.read.parquet(vroot.toString)
-      .select("id_new", "id_old", "inter", "jaccard"))
-  }
+  def winnowVerdicts(spark: SparkSession,
+      statePath: String): Option[DataFrame] =
+    BatchState(spark, statePath).read("verdicts")
+      .map(_.select("id_new", "id_old", "inter", "jaccard"))
 
   /** #180 — `stream_pq_usage`: the #178 PQ code-usage dial maintained
     * while vectors ARRIVE, with a FROZEN codebook (the #130/#168
@@ -1179,7 +1087,8 @@ object Streams {
     * artifact; ingest encodes against it without refitting, so ingest
     * and the periodic batch readout cannot disagree about what a code
     * means). Per batch ONE (subspace, code) integer contraction lands
-    * replay-safely under `usage/batch=<id>` (overwrite-by-batchId).
+    * under `usage/batch=<id>` (the [[graft.sinks.Sinks.foldSink]]
+    * layout).
     * Counts are integer-additive under ANY batch split — the frozen
     * codebook makes the encode a pure per-vector function — so
     * [[pqUsageState]] folds partials into EXACTLY the one-shot
@@ -1192,31 +1101,23 @@ object Streams {
     */
   def pqUsageSink(vectors: DataFrame, codebooks: DataFrame,
       statePath: String, checkpointDir: String,
-      idCol: String = "vec_id", vecCol: String = "v")
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    vectors.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyPqUsageBatch(batch, batchId, codebooks, statePath,
-          idCol, vecCol)
-      }
+      idCol: String = "vec_id", vecCol: String = "v"): DataStreamWriter[Row] =
+    foldSink(vectors, checkpointDir)(applyPqUsageBatch(_, _, codebooks,
+      statePath, idCol, vecCol))
 
   /** One maintenance step of [[pqUsageSink]] (package-visible so the
     * spec can drive replay directly). */
   private[graft] def applyPqUsageBatch(batch: DataFrame, batchId: Long,
       codebooks: DataFrame, statePath: String, idCol: String,
       vecCol: String): Unit = {
-    import org.apache.hadoop.fs.Path
-    val root = new Path(new Path(statePath).toUri.getPath)
     if (batch.isEmpty) return
     // pqEncode applies the PQ usable rule (declared dim, no null/NaN
     // element) itself — poisoned ingest simply produces no code row
-    graft.api.Graft.pqEncode(batch.select(col(idCol), col(vecCol)),
-        idCol, vecCol, codebooks)
-      .select(posexplode(col("codes")).as(Seq("subspace", "code")))
-      .groupBy("subspace", "code").agg(count(lit(1)).as("n"))
-      .write.mode("overwrite")
-      .parquet(new Path(root, s"usage/batch=$batchId").toString)
+    BatchState(batch.sparkSession, statePath).put("usage", batchId,
+      graft.api.Graft.pqEncode(batch.select(col(idCol), col(vecCol)),
+          idCol, vecCol, codebooks)
+        .select(posexplode(col("codes")).as(Seq("subspace", "code")))
+        .groupBy("subspace", "code").agg(count(lit(1)).as("n")))
   }
 
   /** The usage readout after the last completed batch —
@@ -1225,22 +1126,18 @@ object Streams {
     * The share denominator is the subspace-0 total: every encoded
     * vector carries exactly one code per subspace.
     */
-  def pqUsageState(spark: org.apache.spark.sql.SparkSession,
-      statePath: String): Option[DataFrame] = {
-    import org.apache.hadoop.fs.Path
-    val uroot = new Path(new Path(statePath).toUri.getPath, "usage")
-    val fs = uroot.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(uroot)) return None
-    val folded = spark.read.parquet(uroot.toString)
-      .groupBy("subspace", "code").agg(sum("n").as("n_vecs"))
-    val tot = folded.where(col("subspace") === 0)
-      .agg(sum("n_vecs").as("tot"))
-    Some(folded.crossJoin(tot)
-      .withColumn("share", col("n_vecs").cast("double") / col("tot"))
-      .select(col("subspace").cast("int").as("subspace"), col("code"),
-        col("n_vecs"), col("share"))
-      .orderBy("subspace", "code"))
-  }
+  def pqUsageState(spark: SparkSession,
+      statePath: String): Option[DataFrame] =
+    BatchState(spark, statePath).read("usage").map { usage =>
+      val folded = usage.groupBy("subspace", "code").agg(sum("n").as("n_vecs"))
+      val tot = folded.where(col("subspace") === 0)
+        .agg(sum("n_vecs").as("tot"))
+      folded.crossJoin(tot)
+        .withColumn("share", col("n_vecs").cast("double") / col("tot"))
+        .select(col("subspace").cast("int").as("subspace"), col("code"),
+          col("n_vecs"), col("share"))
+        .orderBy("subspace", "code")
+    }
 
   /** #207 — `stream_dim_freshness` / `dimEnrichSink`: fact enrichment
     * that FOLLOWS the dim store with micro-batch granularity — the
@@ -1271,10 +1168,9 @@ object Streams {
     * `bucket` routing column is dropped) or a plain
     * [[graft.sinks.Sinks.upsert]] snapshot. Facts LEFT-join the dim
     * (broadcast — the dim side is the small side by contract) on
-    * `factKey = dimKey`; enriched rows land replay-safely under
-    * `enriched/batch=<id>` (overwrite ⟹ at-least-once replay is a
-    * fixpoint at the then-current dim — a replay re-enriches at the
-    * LATEST snapshot, it does not resurrect the stale dim).
+    * `factKey = dimKey`; enriched rows land under `enriched/batch=<id>`
+    * (the [[graft.sinks.Sinks.foldSink]] layout — a replay re-enriches
+    * at the LATEST snapshot, it does not resurrect the stale dim).
     * [[dimEnrichedState]] unions the landed batches.
     *
     * BROADCAST GUARD (r18 verdict item 3, the cmsDials loud-cap
@@ -1294,13 +1190,9 @@ object Streams {
   def dimEnrichSink(facts: DataFrame, dimPath: String, statePath: String,
       checkpointDir: String, factKey: String, dimKey: String,
       maxDimBytes: Long = 64L << 20, broadcastDim: Boolean = true)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    facts.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyDimEnrichBatch(batch, batchId, dimPath, statePath,
-          factKey, dimKey, maxDimBytes, broadcastDim)
-      }
+      : DataStreamWriter[Row] =
+    foldSink(facts, checkpointDir)(applyDimEnrichBatch(_, _, dimPath,
+      statePath, factKey, dimKey, maxDimBytes, broadcastDim))
 
   /** One enrichment step of [[dimEnrichSink]] (package-visible so the
     * spec can drive replay directly). */
@@ -1308,11 +1200,8 @@ object Streams {
       dimPath: String, statePath: String, factKey: String,
       dimKey: String, maxDimBytes: Long = 64L << 20,
       broadcastDim: Boolean = true): Unit = {
-    import org.apache.hadoop.fs.Path
     val spark = batch.sparkSession
-    val root = new Path(new Path(statePath).toUri.getPath)
-    val droot = new Path(new Path(dimPath).toUri.getPath)
-    val fs = droot.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val (fs, droot) = graft.sinks.Sinks.qualified(spark, dimPath)
     require(fs.exists(droot),
       s"dimEnrichSink: no dim store at $dimPath — land at least one dim " +
         "batch first (the enriched schema is dim-derived, so an absent " +
@@ -1335,7 +1224,8 @@ object Streams {
     // cross-bucket point-in-time consistency matters.
     def rawDim(): DataFrame = {
       val dim0 = spark.read.parquet(droot.toString)
-      if (fs.exists(new Path(droot, "_graft_buckets"))) dim0.drop("bucket")
+      if (fs.exists(new org.apache.hadoop.fs.Path(droot, "_graft_buckets")))
+        dim0.drop("bucket")
       else dim0
     }
     val joined =
@@ -1414,22 +1304,16 @@ object Streams {
         // read failure aborts the batch before the write commits
         batch.join(rawDim().withColumnRenamed(dimKey, factKey),
           Seq(factKey), "left")
-    joined.write.mode("overwrite")
-      .parquet(new Path(root, s"enriched/batch=$batchId").toString)
+    BatchState(spark, statePath).put("enriched", batchId, joined)
   }
 
   /** Everything enriched so far, batch column included — each row
     * carries the dim values AS OF its own micro-batch (the freshness
     * contract made visible). None before the first batch.
     */
-  def dimEnrichedState(spark: org.apache.spark.sql.SparkSession,
-      statePath: String): Option[DataFrame] = {
-    import org.apache.hadoop.fs.Path
-    val eroot = new Path(new Path(statePath).toUri.getPath, "enriched")
-    val fs = eroot.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(eroot)) return None
-    Some(spark.read.parquet(eroot.toString))
-  }
+  def dimEnrichedState(spark: SparkSession,
+      statePath: String): Option[DataFrame] =
+    BatchState(spark, statePath).read("enriched")
 
   /** Collect a small FROZEN artifact (bounds, centroids, codebooks —
     * dim/k-bounded frames fitted offline) to a LocalRelation at sink
@@ -1451,8 +1335,8 @@ object Streams {
     * re-fit on a cadence, the #130/#196 frozen-model rule; both are
     * collected to LocalRelations at sink construction per the r18
     * clip-sink resilience fix) and appended cell-carrying under
-    * `index/batch=<id>` (overwrite ⟹ at-least-once replay is a
-    * fixpoint). Because the frozen artifacts make encode a PURE
+    * `index/batch=<id>` (the [[graft.sinks.Sinks.foldSink]] layout).
+    * Because the frozen artifacts make encode a PURE
     * per-row function, the maintained index is bit-identical to a
     * one-shot [[graft.api.Graft.ivfSqIndex]] over everything ingested
     * — batch boundaries cannot change any code (StreamingSpec pins
@@ -1473,17 +1357,13 @@ object Streams {
       bounds: DataFrame, statePath: String, checkpointDir: String,
       dim: Int, idCol: String = "vec_id", vecCol: String = "v",
       centIdCol: String = "cent_id", centVecCol: String = "cv",
-      residual: Boolean = true)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
+      residual: Boolean = true): DataStreamWriter[Row] = {
     val frozenCents = freezeLocal(
       centroids.select(col(centIdCol), col(centVecCol)))
     val frozenBounds = freezeLocal(bounds)
-    vectors.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyIvfSqBatch(batch, batchId, frozenCents, frozenBounds,
-          statePath, dim, idCol, vecCol, centIdCol, centVecCol, residual)
-      }
+    foldSink(vectors, checkpointDir)(applyIvfSqBatch(_, _, frozenCents,
+      frozenBounds, statePath, dim, idCol, vecCol, centIdCol, centVecCol,
+      residual))
   }
 
   /** One ingest step of [[ivfSqIndexSink]] (package-visible so the
@@ -1491,15 +1371,11 @@ object Streams {
   private[graft] def applyIvfSqBatch(batch: DataFrame, batchId: Long,
       centroids: DataFrame, bounds: DataFrame, statePath: String,
       dim: Int, idCol: String, vecCol: String, centIdCol: String,
-      centVecCol: String, residual: Boolean): Unit = {
-    import org.apache.hadoop.fs.Path
-    val root = new Path(new Path(statePath).toUri.getPath)
-    graft.api.Graft.ivfSqIndex(batch.select(col(idCol), col(vecCol)),
+      centVecCol: String, residual: Boolean): Unit =
+    BatchState(batch.sparkSession, statePath).put("index", batchId,
+      graft.api.Graft.ivfSqIndex(batch.select(col(idCol), col(vecCol)),
         idCol, vecCol, centroids, centIdCol, centVecCol, bounds, dim,
-        residual)
-      .write.mode("overwrite")
-      .parquet(new Path(root, s"index/batch=$batchId").toString)
-  }
+        residual))
 
   /** The maintained index after the last completed batch — exactly
     * the [[graft.api.Graft.ivfSqIndex]] schema `(id, cell, codes,
@@ -1508,15 +1384,10 @@ object Streams {
     * build; read the `index/` tree directly if a compaction cadence
     * wants per-batch slices). None before the first batch.
     */
-  def ivfSqIndexState(spark: org.apache.spark.sql.SparkSession,
-      statePath: String): Option[DataFrame] = {
-    import org.apache.hadoop.fs.Path
-    val iroot = new Path(new Path(statePath).toUri.getPath, "index")
-    val fs = iroot.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(iroot)) return None
-    Some(spark.read.parquet(iroot.toString)
-      .select("id", "cell", "codes", "residual"))
-  }
+  def ivfSqIndexState(spark: SparkSession,
+      statePath: String): Option[DataFrame] =
+    BatchState(spark, statePath).read("index")
+      .map(_.select("id", "cell", "codes", "residual"))
 
   /** #201 — streaming SQ8 clip-rate maintenance: the drift monitor a
     * frozen scalar quantizer needs in production. [[graft.api.Graft
@@ -1528,8 +1399,8 @@ object Streams {
     * frozen-artifact discipline — poisoned ingest simply produces no
     * code row, per the encode's usable rule), contract to `dim` rows
     * of integer boundary-level counts, land them additively under
-    * `clip/batch=<id>` (overwrite ⟹ replay-safe; foreachBatch is
-    * at-least-once). [[sqClipState]] folds the partials into the
+    * `clip/batch=<id>` (the [[graft.sinks.Sinks.foldSink]] layout).
+    * [[sqClipState]] folds the partials into the
     * per-dimension readout.
     *
     * At the FIT corpus the boundary levels are legitimately occupied
@@ -1543,8 +1414,7 @@ object Streams {
     */
   def sqClipSink(vectors: DataFrame, bounds: DataFrame,
       statePath: String, checkpointDir: String,
-      idCol: String = "vec_id", vecCol: String = "v")
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
+      idCol: String = "vec_id", vecCol: String = "v"): DataStreamWriter[Row] = {
     // materialize the frozen artifact ONCE at sink construction: the
     // caller may pass a lazy sqBounds(corpus) plan, and without this
     // every micro-batch would re-run the corpus-wide min/max fit (plus
@@ -1559,33 +1429,26 @@ object Streams {
     // dim = the frozen artifact's row count; collect() on a
     // LocalRelation is a driver-local array read, no job
     val dim = frozen.collect().length
-    vectors.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applySqClipBatch(batch, batchId, frozen, dim, statePath, idCol, vecCol)
-      }
+    foldSink(vectors, checkpointDir)(applySqClipBatch(_, _, frozen, dim,
+      statePath, idCol, vecCol))
   }
 
   /** One maintenance step of [[sqClipSink]] (package-visible so the
     * spec can drive replay directly). */
   private[graft] def applySqClipBatch(batch: DataFrame, batchId: Long,
       bounds: DataFrame, dim: Int, statePath: String, idCol: String,
-      vecCol: String): Unit = {
-    import org.apache.hadoop.fs.Path
-    val root = new Path(new Path(statePath).toUri.getPath)
+      vecCol: String): Unit =
     // no isEmpty probe (a take(1) job per micro-batch of pure ingest
     // overhead — r17 ADVICE): an empty batch writes an empty partial,
     // which the additive fold in [[sqClipState]] absorbs for free
-    graft.api.Graft.sqEncode(batch.select(col(idCol), col(vecCol)),
-        idCol, vecCol, bounds, dim)
-      .select(posexplode(col("codes")).as(Seq("d", "code")))
-      .groupBy("d").agg(
-        count(lit(1)).as("n"),
-        sum(when(col("code") === lit(-128), 1L).otherwise(0L)).as("n_lo"),
-        sum(when(col("code") === lit(127), 1L).otherwise(0L)).as("n_hi"))
-      .write.mode("overwrite")
-      .parquet(new Path(root, s"clip/batch=$batchId").toString)
-  }
+    BatchState(batch.sparkSession, statePath).put("clip", batchId,
+      graft.api.Graft.sqEncode(batch.select(col(idCol), col(vecCol)),
+          idCol, vecCol, bounds, dim)
+        .select(posexplode(col("codes")).as(Seq("d", "code")))
+        .groupBy("d").agg(
+          count(lit(1)).as("n"),
+          sum(when(col("code") === lit(-128), 1L).otherwise(0L)).as("n_lo"),
+          sum(when(col("code") === lit(127), 1L).otherwise(0L)).as("n_hi")))
 
   /** The clip readout after the last completed batch: per dimension
     * `(d, n_vecs, n_lo, n_hi, lo_rate, hi_rate, clip_rate)` — integer
@@ -1593,13 +1456,9 @@ object Streams {
     * (bit-identical to the one-shot encode aggregate; spec-pinned).
     * None before the first batch.
     */
-  def sqClipState(spark: org.apache.spark.sql.SparkSession,
-      statePath: String): Option[DataFrame] = {
-    import org.apache.hadoop.fs.Path
-    val croot = new Path(new Path(statePath).toUri.getPath, "clip")
-    val fs = croot.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(croot)) return None
-    Some(spark.read.parquet(croot.toString)
+  def sqClipState(spark: SparkSession,
+      statePath: String): Option[DataFrame] =
+    BatchState(spark, statePath).read("clip").map(_
       .groupBy("d").agg(sum("n").as("n_vecs"),
         sum("n_lo").as("n_lo"), sum("n_hi").as("n_hi"))
       .select(col("d").cast("int").as("d"), col("n_vecs"),
@@ -1609,7 +1468,6 @@ object Streams {
         ((col("n_lo") + col("n_hi")).cast("double") / col("n_vecs"))
           .as("clip_rate"))
       .orderBy("d"))
-  }
 
   /** #203 — streaming Count-Min-Sketch maintenance: the #202
     * frequency sketch folded at ingest. CMS counters are pure
@@ -1619,9 +1477,10 @@ object Streams {
     * sketch is bit-identical to a one-shot [[graft.api.Graft
     * .cmsSketch]] over everything ingested. Per batch: tokenize
     * (whitespace, the #202 grain), sketch the batch at the FROZEN
-    * dials, land the depth×width partial under `cms/batch=<id>`
-    * (overwrite ⟹ replay-safe). [[cmsState]] folds partials on read
-    * and serves estimates via [[graft.api.Graft.cmsEstimate]].
+    * dials, land the depth×width partial under `cms/batch=<id>` (the
+    * [[graft.sinks.Sinks.foldSink]] layout). [[cmsState]] folds
+    * partials on read and serves estimates via
+    * [[graft.api.Graft.cmsEstimate]].
     *
     * This is the corpus-scale term-frequency store an ingest pipeline
     * actually keeps: state is depth×width longs per batch regardless
@@ -1635,29 +1494,22 @@ object Streams {
     */
   def cmsSink(docs: DataFrame, depth: Int, width: Int,
       statePath: String, checkpointDir: String,
-      textCol: String = "text")
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyCmsBatch(batch, batchId, depth, width, statePath, textCol)
-      }
+      textCol: String = "text"): DataStreamWriter[Row] =
+    foldSink(docs, checkpointDir)(applyCmsBatch(_, _, depth, width,
+      statePath, textCol))
 
   /** One maintenance step of [[cmsSink]] (package-visible so the spec
     * can drive replay directly). */
   private[graft] def applyCmsBatch(batch: DataFrame, batchId: Long,
       depth: Int, width: Int, statePath: String, textCol: String): Unit = {
-    import org.apache.hadoop.fs.Path
-    val root = new Path(new Path(statePath).toUri.getPath)
     // no isEmpty probe (r17 ADVICE): an empty batch writes an empty
     // marker-bearing partial; [[cmsState]]'s additive fold and
     // cmsEstimate's empty-sketch rule both absorb it
     val words = batch
       .select(explode(split(col(textCol), " ")).as("word"))
       .filter(length(col("word")) > 0)
-    graft.api.Graft.cmsSketch(words, "word", depth, width)
-      .write.mode("overwrite")
-      .parquet(new Path(root, s"cms/batch=$batchId").toString)
+    BatchState(batch.sparkSession, statePath).put("cms", batchId,
+      graft.api.Graft.cmsSketch(words, "word", depth, width))
   }
 
   /** The folded sketch after the last completed batch — the
@@ -1666,17 +1518,12 @@ object Streams {
     * dials), directly servable by [[graft.api.Graft.cmsEstimate]].
     * None before the first batch.
     */
-  def cmsState(spark: org.apache.spark.sql.SparkSession,
-      statePath: String): Option[DataFrame] = {
-    import org.apache.hadoop.fs.Path
-    val croot = new Path(new Path(statePath).toUri.getPath, "cms")
-    val fs = croot.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(croot)) return None
-    Some(spark.read.parquet(croot.toString)
+  def cmsState(spark: SparkSession,
+      statePath: String): Option[DataFrame] =
+    BatchState(spark, statePath).read("cms").map(_
       .groupBy("d", "bucket", "cms_depth", "cms_width")
       .agg(sum("n").as("n"))
       .select("d", "bucket", "n", "cms_depth", "cms_width"))
-  }
 
   /** One ingest step of [[semanticDedupSink]] (package-visible so the
     * spec can drive replay directly).
@@ -1684,21 +1531,14 @@ object Streams {
   private[graft] def applySemanticBatch(batch: DataFrame, batchId: Long,
       centroids: DataFrame, statePath: String, idCol: String,
       vecCol: String, tau: Double): Unit = {
-    import org.apache.hadoop.fs.Path
-    val spark = batch.sparkSession
-    val root = new Path(new Path(statePath).toUri.getPath)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val indexRoot = new Path(root, "index")
+    val st = BatchState(batch.sparkSession, statePath)
     val b = batch.select(col(idCol), col(vecCol)).persist()
     try {
       if (b.isEmpty) return
       val bIdx = graft.api.Graft.ivfIndex(b, idCol, vecCol,
         centroids, "cent_id", "cv").localCheckpoint(true)
-      val base =
-        if (fs.exists(indexRoot))
-          spark.read.parquet(indexRoot.toString)
-            .where(col("batch") < batchId).select("id", "cell", "vec")
-        else bIdx.limit(0)
+      val base = st.before("index", batchId)
+        .map(_.select("id", "cell", "vec")).getOrElse(bIdx.limit(0))
       // verdicts against the store-as-of-this-batch plus within-batch
       // smaller ids — the #104 contract; reusing the precomputed bIdx
       // as the "batch" (it carries id/cell/vec, and re-assignment of
@@ -1707,10 +1547,8 @@ object Streams {
         base, centroids, "cent_id", "cv",
         bIdx.select(col("id").as(idCol), col("vec").as(vecCol)),
         idCol, vecCol, tau).localCheckpoint(true)
-      bIdx.write.mode("overwrite")
-        .parquet(new Path(indexRoot, s"batch=$batchId").toString)
-      verdicts.write.mode("overwrite")
-        .parquet(new Path(root, s"verdicts/batch=$batchId").toString)
+      st.put("index", batchId, bIdx)
+      st.put("verdicts", batchId, verdicts)
     } finally b.unpersist()
   }
 
@@ -1721,9 +1559,9 @@ object Streams {
     * per-batch status join scans it exchange-free and only the
     * arriving batch shuffles — per-batch cost linear in the batch,
     * never the corpus. Each batch's `added` / `changed` / `unchanged`
-    * statuses land replay-safely under `status/batch=<id>` (overwrite;
-    * foreachBatch is at-least-once). `removed` is only decidable once
-    * the new snapshot is complete: [[corpusDiffSweep]] anti-joins the
+    * statuses land under `status/batch=<id>` (the
+    * [[graft.sinks.Sinks.foldSink]] layout). `removed` is only
+    * decidable once the new snapshot is complete: [[corpusDiffSweep]] anti-joins the
     * stored snapshot against every seen id and returns the FULL diff
     * frame — spec-pinned equal to the one-shot
     * [[graft.api.Graft.corpusDiff]] over the same snapshots. Ids must
@@ -1732,14 +1570,9 @@ object Streams {
     */
   def corpusDiffSink(newRows: DataFrame, snapshotTable: String,
       statePath: String, checkpointDir: String,
-      idCol: String = "doc_id", fpCol: String = "fp")
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    newRows.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyCorpusDiffBatch(batch, batchId, snapshotTable, statePath,
-          idCol, fpCol)
-      }
+      idCol: String = "doc_id", fpCol: String = "fp"): DataStreamWriter[Row] =
+    foldSink(newRows, checkpointDir)(applyCorpusDiffBatch(_, _,
+      snapshotTable, statePath, idCol, fpCol))
 
   /** One status step of [[corpusDiffSink]] (package-visible so the
     * spec can drive replay directly).
@@ -1747,26 +1580,23 @@ object Streams {
   private[graft] def applyCorpusDiffBatch(batch: DataFrame, batchId: Long,
       snapshotTable: String, statePath: String, idCol: String,
       fpCol: String): Unit = {
-    import org.apache.hadoop.fs.Path
     val spark = batch.sparkSession
-    val root = new Path(new Path(statePath).toUri.getPath)
     // Persist before the isEmpty action: foreachBatch frames re-execute
     // their whole micro-batch plan per action, so an unpersisted batch
     // would be computed twice per ingest (the applySemanticBatch rule).
     val b = batch.select(col(idCol).as("id"), col(fpCol).as("fp_new"))
       .where(col("id").isNotNull)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .persist(MEMORY_AND_DISK)
     try {
       if (b.isEmpty) return
       val old = spark.table(snapshotTable)
         .select(col(idCol).as("_old_id"), col(fpCol).as("fp_old"))
-      b.join(old, col("id") === col("_old_id"), "left")
-        .select(col("id"), col("fp_old"), col("fp_new"),
-          when(col("_old_id").isNull, "added")
-            .when(col("fp_old") <=> col("fp_new"), "unchanged")
-            .otherwise("changed").as("status"))
-        .write.mode("overwrite")
-        .parquet(new Path(root, s"status/batch=$batchId").toString)
+      BatchState(spark, statePath).put("status", batchId,
+        b.join(old, col("id") === col("_old_id"), "left")
+          .select(col("id"), col("fp_old"), col("fp_new"),
+            when(col("_old_id").isNull, "added")
+              .when(col("fp_old") <=> col("fp_new"), "unchanged")
+              .otherwise("changed").as("status")))
     } finally b.unpersist()
   }
 
@@ -1776,27 +1606,21 @@ object Streams {
     * frame (per-batch statuses ∪ removed), column-compatible with
     * [[graft.api.Graft.corpusDiff]] minus carry.
     */
-  def corpusDiffSweep(spark: org.apache.spark.sql.SparkSession,
+  def corpusDiffSweep(spark: SparkSession,
       snapshotTable: String, statePath: String,
       idCol: String = "doc_id", fpCol: String = "fp"): DataFrame = {
-    import org.apache.hadoop.fs.Path
-    val root = new Path(new Path(statePath).toUri.getPath)
     val old = spark.table(snapshotTable)
       .select(col(idCol).as("id"), col(fpCol).as("fp_old"))
     // A stream that delivered no batches writes no status/ dir; the
     // empty new snapshot is still a valid diff — every stored id is
-    // `removed` (the semanticDedupVerdicts missing-dir convention).
-    val statusRoot = new Path(root, "status")
-    val fs = statusRoot.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val statuses =
-      if (!fs.exists(statusRoot))
-        spark.emptyDataFrame
-          .select(lit(null).cast(old.schema("id").dataType).as("id"),
-            lit(null).cast(old.schema("fp_old").dataType).as("fp_old"),
-            lit(null).cast(old.schema("fp_old").dataType).as("fp_new"),
-            lit(null).cast("string").as("status"))
-      else spark.read.parquet(statusRoot.toString)
-        .select("id", "fp_old", "fp_new", "status")
+    // `removed` (the documented empty frame for a missing status/).
+    val statuses = BatchState(spark, statePath).read("status")
+      .map(_.select("id", "fp_old", "fp_new", "status"))
+      .getOrElse(spark.emptyDataFrame
+        .select(lit(null).cast(old.schema("id").dataType).as("id"),
+          lit(null).cast(old.schema("fp_old").dataType).as("fp_old"),
+          lit(null).cast(old.schema("fp_old").dataType).as("fp_new"),
+          lit(null).cast("string").as("status")))
     val removed = old.join(statuses.select("id"), Seq("id"), "left_anti")
       .select(col("id"), col("fp_old"),
         lit(null).cast(old.schema("fp_old").dataType).as("fp_new"),
@@ -1808,8 +1632,8 @@ object Streams {
     * maintained while the new snapshot ARRIVES. Each micro-batch
     * contracts to its (source, length-bucket) histogram
     * ([[graft.api.Graft.driftHistogram]] — doc count + token mass,
-    * integer-additive) and lands replay-safely under
-    * `drift/batch=<id>` (overwrite; foreachBatch is at-least-once).
+    * integer-additive) and lands under `drift/batch=<id>` (the
+    * [[graft.sinks.Sinks.foldSink]] layout).
     * Nothing corpus-sized is ever held: per-batch state is the
     * batch's own |sources|×|buckets| rows. [[corpusDriftSweep]] sums
     * the partials — additivity makes the sum EXACTLY the one-shot
@@ -1819,73 +1643,54 @@ object Streams {
     */
   def corpusDriftSink(newRows: DataFrame, statePath: String,
       checkpointDir: String, sourceCol: String = "source",
-      tokensCol: String = "n_tokens")
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    newRows.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyCorpusDriftBatch(batch, batchId, statePath, sourceCol, tokensCol)
-      }
+      tokensCol: String = "n_tokens"): DataStreamWriter[Row] =
+    foldSink(newRows, checkpointDir)(applyCorpusDriftBatch(_, _, statePath,
+      sourceCol, tokensCol))
 
   /** One histogram step of [[corpusDriftSink]] (package-visible so
     * the spec can drive replay directly).
     */
   private[graft] def applyCorpusDriftBatch(batch: DataFrame, batchId: Long,
-      statePath: String, sourceCol: String, tokensCol: String): Unit = {
-    import org.apache.hadoop.fs.Path
-    val root = new Path(new Path(statePath).toUri.getPath)
-    graft.api.Graft.driftHistogram(batch, sourceCol, tokensCol)
-      .write.mode("overwrite")
-      .parquet(new Path(root, s"drift/batch=$batchId").toString)
-  }
+      statePath: String, sourceCol: String, tokensCol: String): Unit =
+    BatchState(batch.sparkSession, statePath).put("drift", batchId,
+      graft.api.Graft.driftHistogram(batch, sourceCol, tokensCol))
 
   /** The full drift readout once the new snapshot's stream is done:
     * micro-batch partials summed (exact — integer additivity), then
     * the #122 tail against `oldHist` (a [[graft.api.Graft
     * .driftHistogram]] of the OLD snapshot). A stream that delivered
     * no batches is an empty new snapshot: every old source reads as
-    * docs_new = 0 (the [[corpusDiffSweep]] missing-dir convention).
+    * docs_new = 0 (the documented empty frame for a missing drift/).
     */
-  def corpusDriftSweep(spark: org.apache.spark.sql.SparkSession,
+  def corpusDriftSweep(spark: SparkSession,
       oldHist: DataFrame, statePath: String): DataFrame = {
-    import org.apache.hadoop.fs.Path
-    val root = new Path(new Path(statePath).toUri.getPath, "drift")
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val newHist =
-      if (!fs.exists(root))
-        spark.emptyDataFrame.select(
-          lit(null).cast(oldHist.schema("source").dataType).as("source"),
-          lit(null).cast("long").as("bucket"),
-          lit(null).cast("long").as("n"),
-          lit(null).cast("long").as("tok"))
-      else spark.read.parquet(root.toString)
-        .groupBy("source", "bucket")
-        .agg(sum("n").as("n"), sum("tok").as("tok"))
+    val newHist = BatchState(spark, statePath).read("drift")
+      .map(_.groupBy("source", "bucket")
+        .agg(sum("n").as("n"), sum("tok").as("tok")))
+      .getOrElse(spark.emptyDataFrame.select(
+        lit(null).cast(oldHist.schema("source").dataType).as("source"),
+        lit(null).cast("long").as("bucket"),
+        lit(null).cast("long").as("n"),
+        lit(null).cast("long").as("tok")))
     graft.api.Graft.corpusDriftFromHistograms(oldHist, newHist)
   }
 
   /** #130 — LM quality scoring AT INGEST: each arriving micro-batch
     * scored against a FROZEN [[graft.api.Graft.unigramModel]] (fit on
     * a seed corpus, re-fit on a cadence — the streaming-centroid
-    * lambda rule), scores landing replay-safely under
-    * `scores/batch=<id>`. A doc's score depends only on its own text
-    * and the model (stateless — [[graft.api.Graft.scoreQualityLm]] is
-    * literally the batch function), so micro-batch boundaries cannot
-    * change any score and replay is a pure overwrite.
+    * lambda rule), scores landing under `scores/batch=<id>` (the
+    * [[graft.sinks.Sinks.foldSink]] layout). A doc's score depends
+    * only on its own text and the model (stateless —
+    * [[graft.api.Graft.scoreQualityLm]] is literally the batch
+    * function), so micro-batch boundaries cannot change any score and
+    * replay is a pure overwrite.
     */
   def qualityLmSink(docs: DataFrame, model: DataFrame, statePath: String,
       checkpointDir: String, idCol: String = "doc_id",
-      textCol: String = "text")
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
-    require(idCol != "batch",
-      "qualityLmSink stores scores under batch=<id> partitions; an id " +
-        "column named 'batch' would collide with partition discovery — " +
-        "rename it first")
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyQualityLmBatch(batch, batchId, model, statePath, idCol, textCol)
-      }
+      textCol: String = "text"): DataStreamWriter[Row] = {
+    BatchState.requireNoBatchColumn("qualityLmSink", idCol)
+    foldSink(docs, checkpointDir)(applyQualityLmBatch(_, _, model,
+      statePath, idCol, textCol))
   }
 
   /** One scoring step of [[qualityLmSink]] (package-visible so the
@@ -1894,58 +1699,41 @@ object Streams {
   private[graft] def applyQualityLmBatch(batch: DataFrame, batchId: Long,
       model: DataFrame, statePath: String, idCol: String,
       textCol: String): Unit = {
-    import org.apache.hadoop.fs.Path
-    val root = new Path(new Path(statePath).toUri.getPath)
     // Persist: the scorer's plan references the micro-batch twice (the
     // word explode and the keep-every-id left join), and foreachBatch
     // re-executes the batch per reference (the applyCorpusDiffBatch rule)
-    val b = batch.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try
-      graft.api.Graft.scoreQualityLm(b, model, idCol, textCol)
-        .write.mode("overwrite")
-        .parquet(new Path(root, s"scores/batch=$batchId").toString)
+    val b = batch.persist(MEMORY_AND_DISK)
+    try BatchState(batch.sparkSession, statePath).put("scores", batchId,
+      graft.api.Graft.scoreQualityLm(b, model, idCol, textCol))
     finally b.unpersist()
   }
 
   /** All scores emitted so far by a [[qualityLmSink]] (None before the
     * first completed batch — the [[semanticDedupVerdicts]] convention).
     */
-  def qualityLmScores(spark: org.apache.spark.sql.SparkSession,
-      statePath: String): Option[DataFrame] = {
-    import org.apache.hadoop.fs.Path
-    val sroot = new Path(new Path(statePath).toUri.getPath, "scores")
-    val fs = sroot.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(sroot)) None
+  def qualityLmScores(spark: SparkSession,
+      statePath: String): Option[DataFrame] =
     // drop the batch=<id> partition-discovery column — replay
     // provenance, not part of the score contract
-    else Some(spark.read.parquet(sroot.toString).drop("batch"))
-  }
+    BatchState(spark, statePath).read("scores").map(_.drop("batch"))
 
   /** #196 — discriminative quality-classifier scoring AT INGEST
     * (#195's streaming twin): each arriving micro-batch scored against
     * a FROZEN [[graft.api.Graft.qualityClassifierModel]] (fit offline
     * on a labeled sample, re-fit on a cadence — the [[qualityLmSink]]
-    * deployment), scores landing replay-safely under
-    * `scores/batch=<id>`. A doc's score depends only on its own text
-    * and the broadcast dims+1-row model ([[graft.api.Graft
-    * .qualityClassifierScore]] is literally the batch function), so
-    * micro-batch boundaries cannot change any score and replay is a
-    * pure overwrite.
+    * deployment), scores landing under `scores/batch=<id>` (the
+    * [[graft.sinks.Sinks.foldSink]] layout). A doc's score depends
+    * only on its own text and the broadcast dims+1-row model
+    * ([[graft.api.Graft.qualityClassifierScore]] is literally the
+    * batch function), so micro-batch boundaries cannot change any
+    * score and replay is a pure overwrite.
     */
   def qualityClassifierSink(docs: DataFrame, model: DataFrame,
       statePath: String, checkpointDir: String, idCol: String = "doc_id",
-      textCol: String = "text")
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
-    require(idCol != "batch",
-      "qualityClassifierSink stores scores under batch=<id> partitions; " +
-        "an id column named 'batch' would collide with partition " +
-        "discovery — rename it first")
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyQualityClassifierBatch(batch, batchId, model, statePath,
-          idCol, textCol)
-      }
+      textCol: String = "text"): DataStreamWriter[Row] = {
+    BatchState.requireNoBatchColumn("qualityClassifierSink", idCol)
+    foldSink(docs, checkpointDir)(applyQualityClassifierBatch(_, _, model,
+      statePath, idCol, textCol))
   }
 
   /** One scoring step of [[qualityClassifierSink]] (package-visible so
@@ -1954,67 +1742,47 @@ object Streams {
   private[graft] def applyQualityClassifierBatch(batch: DataFrame,
       batchId: Long, model: DataFrame, statePath: String, idCol: String,
       textCol: String): Unit = {
-    import org.apache.hadoop.fs.Path
-    val root = new Path(new Path(statePath).toUri.getPath)
     // Persist: the feature frame references the micro-batch three times
     // (token explode, per-doc token count, the bias-row union), and
     // foreachBatch re-executes the batch per reference
-    val b = batch.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try
-      graft.api.Graft.qualityClassifierScore(b, model, idCol, textCol)
-        .write.mode("overwrite")
-        .parquet(new Path(root, s"scores/batch=$batchId").toString)
+    val b = batch.persist(MEMORY_AND_DISK)
+    try BatchState(batch.sparkSession, statePath).put("scores", batchId,
+      graft.api.Graft.qualityClassifierScore(b, model, idCol, textCol))
     finally b.unpersist()
   }
 
   /** All scores emitted so far by a [[qualityClassifierSink]] (None
     * before the first completed batch).
     */
-  def qualityClassifierScores(spark: org.apache.spark.sql.SparkSession,
-      statePath: String): Option[DataFrame] = {
-    import org.apache.hadoop.fs.Path
-    val sroot = new Path(new Path(statePath).toUri.getPath, "scores")
-    val fs = sroot.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(sroot)) None
-    else Some(spark.read.parquet(sroot.toString).drop("batch"))
-  }
+  def qualityClassifierScores(spark: SparkSession,
+      statePath: String): Option[DataFrame] =
+    BatchState(spark, statePath).read("scores").map(_.drop("batch"))
 
   /** All drop verdicts emitted so far by a [[semanticDedupSink]]. */
-  def semanticDedupVerdicts(spark: org.apache.spark.sql.SparkSession,
-      statePath: String): Option[DataFrame] = {
-    import org.apache.hadoop.fs.Path
-    val vroot = new Path(new Path(statePath).toUri.getPath, "verdicts")
-    val fs = vroot.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(vroot)) None
-    else Some(spark.read.parquet(vroot.toString)
-      .select("vec_id", "cell", "dup_of_ct", "max_cos"))
-  }
+  def semanticDedupVerdicts(spark: SparkSession,
+      statePath: String): Option[DataFrame] =
+    BatchState(spark, statePath).read("verdicts")
+      .map(_.select("vec_id", "cell", "dup_of_ct", "max_cos"))
 
   /** #147 — `stream_dsir` / `dsirSink`: DSIR selection weights AT
     * INGEST (#146's deployment shape): each arriving micro-batch is
     * scored against a FROZEN [[graft.api.Graft.dsirModel]] (fit on a
     * seed corpus + target slice, re-fit on a cadence — the #130
-    * frozen-model rule), weights landing replay-safely under
-    * `weights/batch=<id>`. A doc's weight depends only on its own
-    * text and the model ([[graft.api.Graft.dsirScore]] is literally
-    * the batch function), so batch boundaries cannot change any
-    * weight and replay is a pure overwrite. The 256-row model
+    * frozen-model rule), weights landing under `weights/batch=<id>`
+    * (the [[graft.sinks.Sinks.foldSink]] layout). A doc's weight
+    * depends only on its own text and the model
+    * ([[graft.api.Graft.dsirScore]] is literally the batch function),
+    * so batch boundaries cannot change any weight and replay is a pure
+    * overwrite. The 256-row model
     * broadcasts into every batch — per-batch cost is the batch's own
     * (doc, bucket) aggregate, nothing corpus-sized.
     */
   def dsirSink(docs: DataFrame, model: DataFrame, statePath: String,
       checkpointDir: String, idCol: String = "doc_id",
-      textCol: String = "text")
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
-    require(idCol != "batch",
-      "dsirSink stores weights under batch=<id> partitions; an id " +
-        "column named 'batch' would collide with partition discovery — " +
-        "rename it first")
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyDsirBatch(batch, batchId, model, statePath, idCol, textCol)
-      }
+      textCol: String = "text"): DataStreamWriter[Row] = {
+    BatchState.requireNoBatchColumn("dsirSink", idCol)
+    foldSink(docs, checkpointDir)(applyDsirBatch(_, _, model, statePath,
+      idCol, textCol))
   }
 
   /** One scoring step of [[dsirSink]] (package-visible so the spec
@@ -2023,41 +1791,33 @@ object Streams {
   private[graft] def applyDsirBatch(batch: DataFrame, batchId: Long,
       model: DataFrame, statePath: String, idCol: String,
       textCol: String): Unit = {
-    import org.apache.hadoop.fs.Path
-    val root = new Path(new Path(statePath).toUri.getPath)
     // Persist: the scorer references the micro-batch twice (word
     // explode + keep-every-id left join) and foreachBatch re-executes
     // the batch per reference (the applyQualityLmBatch rule)
-    val b = batch.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try
-      graft.api.Graft.dsirScore(b, model, idCol, textCol)
-        .write.mode("overwrite")
-        .parquet(new Path(root, s"weights/batch=$batchId").toString)
+    val b = batch.persist(MEMORY_AND_DISK)
+    try BatchState(batch.sparkSession, statePath).put("weights", batchId,
+      graft.api.Graft.dsirScore(b, model, idCol, textCol))
     finally b.unpersist()
   }
 
   /** All weights emitted so far by a [[dsirSink]] (None before the
     * first completed batch — the [[semanticDedupVerdicts]] convention).
     */
-  def dsirWeightsSoFar(spark: org.apache.spark.sql.SparkSession,
-      statePath: String): Option[DataFrame] = {
-    import org.apache.hadoop.fs.Path
-    val wroot = new Path(new Path(statePath).toUri.getPath, "weights")
-    val fs = wroot.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(wroot)) None
-    else Some(spark.read.parquet(wroot.toString).drop("batch"))
-  }
+  def dsirWeightsSoFar(spark: SparkSession,
+      statePath: String): Option[DataFrame] =
+    BatchState(spark, statePath).read("weights").map(_.drop("batch"))
 
   /** #142 — `stream_dedup_lines`: #134's cross-document LINE dedup AT
     * INGEST. Each arriving micro-batch (a) contracts to its line-grain
     * document-frequency partial — `(lk, docs)`, distinct docs per line
     * hash WITHIN the batch; docs are globally unique across batches,
     * so partials are integer-ADDITIVE like the #128 histograms — landed
-    * replay-safely under `lines/batch=<id>`, and (b) emits per-doc
+    * under `lines/batch=<id>`, and (b) emits per-doc
     * verdicts for the ARRIVING docs against the accumulated df store
     * UP TO this batch (`batch <= id` — what makes old-batch replay a
     * fixpoint rather than a verdict rewrite), under
-    * `verdicts/batch=<id>`. Verdicts are PROVISIONAL in the #61/#68
+    * `verdicts/batch=<id>` (the [[graft.sinks.Sinks.foldSink]] layout).
+    * Verdicts are PROVISIONAL in the #61/#68
     * incremental sense: a line becomes corpus-duplicated only when its
     * second distinct doc ARRIVES, so the earlier doc's verdict stays
     * clean — flagged-at-ingest is always a SUBSET of batch-#134-flagged
@@ -2071,17 +1831,10 @@ object Streams {
     */
   def lineDedupSink(docs: DataFrame, statePath: String,
       checkpointDir: String, idCol: String = "doc_id",
-      textCol: String = "text")
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
-    require(idCol != "batch",
-      "lineDedupSink stores state under batch=<id> partitions; an id " +
-        "column named 'batch' would collide with partition discovery — " +
-        "rename it first")
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyLineDedupBatch(batch, batchId, statePath, idCol, textCol)
-      }
+      textCol: String = "text"): DataStreamWriter[Row] = {
+    BatchState.requireNoBatchColumn("lineDedupSink", idCol)
+    foldSink(docs, checkpointDir)(applyLineDedupBatch(_, _, statePath,
+      idCol, textCol))
   }
 
   /** One ingest step of [[lineDedupSink]] (package-visible so the spec
@@ -2089,21 +1842,17 @@ object Streams {
     */
   private[graft] def applyLineDedupBatch(batch: DataFrame, batchId: Long,
       statePath: String, idCol: String, textCol: String): Unit = {
-    import org.apache.hadoop.fs.Path
-    val spark = batch.sparkSession
-    val root = new Path(new Path(statePath).toUri.getPath)
-    val b = batch.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val st = BatchState(batch.sparkSession, statePath)
+    val b = batch.persist(MEMORY_AND_DISK)
     try {
       val lines = graft.operators.Dedup.lineGrain(b, idCol, textCol)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .persist(MEMORY_AND_DISK)
       try {
-        lines.groupBy("lk").agg(countDistinct("doc_id").as("docs"))
-          .write.mode("overwrite")
-          .parquet(new Path(root, s"lines/batch=$batchId").toString)
+        st.put("lines", batchId,
+          lines.groupBy("lk").agg(countDistinct("doc_id").as("docs")))
         // df so far = partials with batch <= id: includes the partial
         // just written, excludes later batches on old-batch replay
-        val flagged = spark.read
-          .parquet(new Path(root, "lines").toString)
+        val flagged = st.read("lines").get
           .where(col("batch") <= batchId)
           .groupBy("lk").agg(sum("docs").as("df"))
           .where(col("df") >= graft.operators.Dedup.LineMinDocs)
@@ -2116,7 +1865,7 @@ object Streams {
             sum(col("line_chars")).as("chars"),
             sum(col("line_chars") * coalesce(col("is_dup"), lit(0L)))
               .as("dup_chars"))
-        b.select(col(idCol).as("doc_id")).distinct()
+        st.put("verdicts", batchId, b.select(col(idCol).as("doc_id")).distinct()
           .join(perDoc, Seq("doc_id"), "left")
           .select(col("doc_id"),
             coalesce(col("n_lines"), lit(0L)).as("n_lines"),
@@ -2126,9 +1875,7 @@ object Streams {
               .otherwise(round(
                 (col("chars") - col("dup_chars")).cast("double") / col("chars"),
                 6))
-              .as("retained_frac"))
-          .write.mode("overwrite")
-          .parquet(new Path(root, s"verdicts/batch=$batchId").toString)
+              .as("retained_frac")))
       } finally lines.unpersist()
     } finally b.unpersist()
   }
@@ -2136,21 +1883,17 @@ object Streams {
   /** All per-doc line verdicts emitted so far by a [[lineDedupSink]]
     * (None before the first completed batch).
     */
-  def lineDedupVerdicts(spark: org.apache.spark.sql.SparkSession,
-      statePath: String): Option[DataFrame] = {
-    import org.apache.hadoop.fs.Path
-    val vroot = new Path(new Path(statePath).toUri.getPath, "verdicts")
-    val fs = vroot.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(vroot)) None
-    else Some(spark.read.parquet(vroot.toString).drop("batch"))
-  }
+  def lineDedupVerdicts(spark: SparkSession,
+      statePath: String): Option[DataFrame] =
+    BatchState(spark, statePath).read("verdicts").map(_.drop("batch"))
 
   /** #143 — `stream_domain_stats`: #135's per-domain curation
     * dashboard maintained while the corpus ARRIVES. Each micro-batch
     * drops blocklisted domains MAP-SIDE (an `isin` literal filter —
     * the broadcast-anti's streaming twin, pruning before anything is
-    * stored), then lands two replay-safe contractions: the
-    * domain-grain integer partial (docs, tokens, quality-gate passes
+    * stored), then lands two contractions (the
+    * [[graft.sinks.Sinks.foldSink]] layout): the domain-grain integer
+    * partial (docs, tokens, quality-gate passes
     * — additive across batches like the #128 histograms) under
     * `stats/batch=<id>`, and the `(domain, fp, cnt, min_id)`
     * fingerprint contraction under `fps/batch=<id>` — the minimal
@@ -2166,17 +1909,10 @@ object Streams {
       statePath: String, checkpointDir: String, idCol: String = "doc_id",
       textCol: String = "text", domainCol: String = "source",
       qualityTau: Double = graft.operators.Corpus.DomainQualityTau)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
-    require(idCol != "batch" && domainCol != "batch",
-      "domainStatsSink stores state under batch=<id> partitions; a " +
-        "column named 'batch' would collide with partition discovery — " +
-        "rename it first")
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyDomainStatsBatch(batch, batchId, blocklist, statePath,
-          idCol, textCol, domainCol, qualityTau)
-      }
+      : DataStreamWriter[Row] = {
+    BatchState.requireNoBatchColumn("domainStatsSink", idCol, domainCol)
+    foldSink(docs, checkpointDir)(applyDomainStatsBatch(_, _, blocklist,
+      statePath, idCol, textCol, domainCol, qualityTau))
   }
 
   /** One maintenance step of [[domainStatsSink]] (package-visible so
@@ -2185,8 +1921,7 @@ object Streams {
   private[graft] def applyDomainStatsBatch(batch: DataFrame, batchId: Long,
       blocklist: Seq[String], statePath: String, idCol: String,
       textCol: String, domainCol: String, qualityTau: Double): Unit = {
-    import org.apache.hadoop.fs.Path
-    val root = new Path(new Path(statePath).toUri.getPath)
+    val st = BatchState(batch.sparkSession, statePath)
     val kept = batch.where(
       if (blocklist.isEmpty) lit(true)
       else !col(domainCol).isin(blocklist: _*))
@@ -2199,19 +1934,15 @@ object Streams {
       .select(col("domain"), col("doc_id"), col("n_tokens"),
         (col("quality_score") > qualityTau).cast("long").as("pass"),
         graft.operators.Dedup.contentFp.as("fp"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .persist(MEMORY_AND_DISK)
     try {
-      scored.groupBy("domain").agg(
-          count(lit(1)).as("n_docs"),
-          sum("n_tokens").as("n_tokens"),
-          sum("pass").as("quality_pass"))
-        .write.mode("overwrite")
-        .parquet(new Path(root, s"stats/batch=$batchId").toString)
-      scored.groupBy("domain", "fp").agg(
-          count(lit(1)).as("cnt"),
-          min("doc_id").as("min_id"))
-        .write.mode("overwrite")
-        .parquet(new Path(root, s"fps/batch=$batchId").toString)
+      st.put("stats", batchId, scored.groupBy("domain").agg(
+        count(lit(1)).as("n_docs"),
+        sum("n_tokens").as("n_tokens"),
+        sum("pass").as("quality_pass")))
+      st.put("fps", batchId, scored.groupBy("domain", "fp").agg(
+        count(lit(1)).as("cnt"),
+        min("doc_id").as("min_id")))
     } finally scored.unpersist()
   }
 
@@ -2222,19 +1953,15 @@ object Streams {
     * against its own domain), ratios derived last — column-for-column
     * the batch `q_domain_stats` readout. None before the first batch.
     */
-  def domainStatsState(spark: org.apache.spark.sql.SparkSession,
+  def domainStatsState(spark: SparkSession,
       statePath: String): Option[DataFrame] = {
-    import org.apache.hadoop.fs.Path
-    val sroot = new Path(new Path(statePath).toUri.getPath, "stats")
-    val fs = sroot.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(sroot)) return None
-    val stats = spark.read.parquet(sroot.toString)
+    val st = BatchState(spark, statePath)
+    val stats = st.read("stats").getOrElse(return None)
       .groupBy("domain").agg(
         sum("n_docs").as("n_docs"),
         sum("n_tokens").as("n_tokens"),
         sum("quality_pass").as("quality_pass"))
-    val fps = spark.read
-      .parquet(new Path(new Path(statePath).toUri.getPath, "fps").toString)
+    val fps = st.read("fps").get
       .groupBy("domain", "fp").agg(
         sum("cnt").as("cnt"), min("min_id").as("min_id"))
     val canon = fps.groupBy("fp").agg(min("min_id").as("gmin"))
@@ -2265,21 +1992,18 @@ object Streams {
     * code, so they cannot drift. Equals the one-shot
     * `q_source_overlap` on everything delivered (modulo the sink's
     * blocklist, which the batch comparator must also apply); replay
-    * safety is inherited from the sink's overwrite-by-batch-id
-    * stores. None before the first batch.
+    * safety is inherited from the sink's
+    * [[graft.sinks.Sinks.foldSink]] stores. None before the first
+    * batch.
     */
-  def sourceOverlapState(spark: org.apache.spark.sql.SparkSession,
+  def sourceOverlapState(spark: SparkSession,
       statePath: String): Option[DataFrame] = {
-    import org.apache.hadoop.fs.Path
-    val froot = new Path(new Path(statePath).toUri.getPath, "fps")
-    val fs = froot.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(froot)) return None
-    val raw = spark.read.parquet(froot.toString)
+    val raw = BatchState(spark, statePath).read("fps").getOrElse(return None)
     // fail with a clear message, not a missing-column resolution error,
     // when pointed at a statePath some OTHER sink owns (ADVICE r11)
     val expected = Seq("domain", "fp", "cnt")
     require(expected.forall(raw.columns.contains),
-      s"$froot is not a domainStatsSink fps store: found columns " +
+      s"$statePath/fps is not a domainStatsSink fps store: found columns " +
         s"[${raw.columns.mkString(", ")}], need [${expected.mkString(", ")}]")
     val counts = raw
       .groupBy(col("domain").as("source"), col("fp"))
@@ -2289,7 +2013,7 @@ object Streams {
 
   /** #150 — `stream_curation_funnel`: the #72 end-to-end curation
     * funnel maintained while the corpus ARRIVES. Per batch, four
-    * replay-safe stores (all overwrite-by-batchId):
+    * stores (the [[graft.sinks.Sinks.foldSink]] layout):
     *
     *  - `counts/batch=<id>` — the stage 0-4 predicate sums. Stages
     *    1-4 (lang, quality, repetition, #193 blocklist) are STATELESS
@@ -2323,150 +2047,10 @@ object Streams {
   def curationFunnelSink(docs: DataFrame, statePath: String,
       checkpointDir: String, idCol: String = "doc_id",
       textCol: String = "text", langCol: String = "lang")
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
-    require(idCol != "batch",
-      "curationFunnelSink stores state under batch=<id> partitions; " +
-        "an id column named 'batch' would collide with partition " +
-        "discovery — rename it first")
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyCurationFunnelBatch(batch, batchId, statePath, idCol,
-          textCol, langCol)
-      }
-  }
-
-  /** The funnel's fingerprint subtree was renamed `fps/` →
-    * `funnel_fps/` (to stop colliding with [[domainStatsSink]]'s
-    * `fps/`, whose rows carry an extra `domain` column). A statePath
-    * written by the pre-rename version still holds funnel history
-    * under `fps/` — silently ignoring it would restart c4 from empty
-    * with no error, so: a legacy `fps/` subtree CARRYING THE FUNNEL
-    * SCHEMA (fp, cnt, min_id — no `domain`) is renamed in place to
-    * `funnel_fps/` (merged nothing: if `funnel_fps/` also exists the
-    * tree is ambiguous and we fail loudly instead). A `fps/` subtree
-    * WITH a `domain` column is the domain sink's — left alone.
-    */
-  /** Roots already checked this JVM — the migration verdict is stable
-    * once reached (migrated, or the subtree is the domain sink's), so
-    * the per-micro-batch hot path must not re-list and re-infer the
-    * growing fps/batch=* tree forever. */
-  private val funnelFpsChecked =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-
-  /** `Some(fps path)` iff the state root holds a legacy `fps/`
-    * subtree that (a) exists, (b) carries at least one COMMITTED part
-    * file, and (c) infers the FUNNEL schema (fp, cnt, min_id — no
-    * `domain`). `None` otherwise — including the not-listable /
-    * still-being-written cases the migration must also skip. Pure
-    * inspection: shared by the WRITE path (which then renames) and
-    * the READ path (which must not — r13 ADVICE: a read-only readout
-    * performing renames can race a concurrent writer sharing the
-    * state root).
-    */
-  /** One listing + one schema read classifies the legacy subtree for
-    * BOTH call sites (review r14: the migrate path used to re-read
-    * the same parquet footer legacyFunnelFps had just read).
-    */
-  private final case class LegacyFpsProbe(
-      funnel: Option[org.apache.hadoop.fs.Path],
-      cols: Set[String],
-      exists: Boolean)
-
-  private def legacyFunnelFps(
-      spark: org.apache.spark.sql.SparkSession,
-      root: org.apache.hadoop.fs.Path): LegacyFpsProbe = {
-    import org.apache.hadoop.fs.Path
-    val legacy = new Path(root, "fps")
-    val fs = legacy.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(legacy)) return LegacyFpsProbe(None, Set.empty, exists = false)
-    // schema inference needs at least one COMMITTED part file — a
-    // crashed write can leave only _temporary/_SUCCESS droppings, and
-    // read.parquet on that throws; an empty tree carries no history
-    val hasCommitted = {
-      val qLegacy = fs.makeQualified(legacy)
-      def clean(p: org.apache.hadoop.fs.Path): Boolean = {
-        var q = p
-        while (q != null && q != qLegacy) {
-          val n = q.getName
-          if (n.startsWith("_") || n.startsWith(".")) return false
-          q = q.getParent
-        }
-        true
-      }
-      val it = fs.listFiles(legacy, /*recursive=*/ true)
-      var found = false
-      while (it.hasNext && !found) found = clean(it.next().getPath)
-      found
-    }
-    if (!hasCommitted) return LegacyFpsProbe(None, Set.empty, exists = true)
-    val cols = spark.read.parquet(legacy.toString).schema.fieldNames.toSet
-    val isFunnelSchema = cols.contains("fp") && cols.contains("min_id") &&
-      !cols.contains("domain")
-    LegacyFpsProbe(if (isFunnelSchema) Some(legacy) else None, cols,
-      exists = true)
-  }
-
-  /** The funnel-fingerprint subtree the READ path should consume:
-    * `funnel_fps/` when present, the legacy funnel-schema `fps/` when
-    * only that exists — resolved WITHOUT renaming anything (the write
-    * path migrates; a readout must not mutate a state root it may be
-    * sharing with a live writer). The both-exist case is the same
-    * ambiguity the write path refuses, stated here read-only.
-    */
-  private def resolveFunnelFps(
-      spark: org.apache.spark.sql.SparkSession,
-      root: org.apache.hadoop.fs.Path): org.apache.hadoop.fs.Path = {
-    import org.apache.hadoop.fs.Path
-    val target = new Path(root, "funnel_fps")
-    // the write-path memo is just as valid here: "checked" means the
-    // legacy tree was migrated, absent, or classified foreign — the
-    // readout resolves straight to funnel_fps/ without re-listing
-    // (review r14: each readout paid O(LIST) + a footer read)
-    if (funnelFpsChecked.contains(root.toString)) return target
-    val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val probe = legacyFunnelFps(spark, root)
-    val legacy = probe.funnel
-    if (!probe.exists || probe.cols.contains("domain"))
-      funnelFpsChecked.add(root.toString)
-    if (fs.exists(target)) {
-      if (legacy.isDefined)
-        throw new IllegalStateException(
-          s"$root holds BOTH a legacy funnel 'fps/' subtree and " +
-            "'funnel_fps/' — reading either alone would under-count " +
-            "history; reconcile manually (move fps/batch=* into " +
-            "funnel_fps/ if the batch ids are disjoint, else drop " +
-            "the stale tree)")
-      target
-    } else legacy.getOrElse(target)
-  }
-
-  private def migrateLegacyFunnelFps(
-      spark: org.apache.spark.sql.SparkSession,
-      root: org.apache.hadoop.fs.Path): Unit = {
-    import org.apache.hadoop.fs.Path
-    if (funnelFpsChecked.contains(root.toString)) return
-    val probe = legacyFunnelFps(spark, root)
-    if (!probe.exists) { funnelFpsChecked.add(root.toString); return }
-    if (probe.funnel.isEmpty) {
-      // either still being written (not memoized: the writer may be
-      // filling it in) or the domain sink's subtree (memoized)
-      if (probe.cols.contains("domain")) funnelFpsChecked.add(root.toString)
-      return
-    }
-    val legacy = probe.funnel.get
-    val fs = legacy.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val target = new Path(root, "funnel_fps")
-    if (fs.exists(target))
-      throw new IllegalStateException(
-        s"$root holds BOTH a legacy funnel 'fps/' subtree and " +
-          "'funnel_fps/' — merging would double-count history; " +
-          "reconcile manually (move fps/batch=* into funnel_fps/ if " +
-          "the batch ids are disjoint, else drop the stale tree)")
-    if (!fs.rename(legacy, target))
-      throw new IllegalStateException(
-        s"failed to migrate legacy funnel state $legacy -> $target")
-    funnelFpsChecked.add(root.toString)
+      : DataStreamWriter[Row] = {
+    BatchState.requireNoBatchColumn("curationFunnelSink", idCol)
+    foldSink(docs, checkpointDir)(applyCurationFunnelBatch(_, _, statePath,
+      idCol, textCol, langCol))
   }
 
   /** One maintenance step of [[curationFunnelSink]] (package-visible
@@ -2475,11 +2059,9 @@ object Streams {
   private[graft] def applyCurationFunnelBatch(batch: DataFrame,
       batchId: Long, statePath: String, idCol: String, textCol: String,
       langCol: String): Unit = {
-    import org.apache.hadoop.fs.Path
     val spark = batch.sparkSession
     graft.functions.WordShingleHashes.register(spark)
-    val root = new Path(new Path(statePath).toUri.getPath)
-    migrateLegacyFunnelFps(spark, root)
+    val st = BatchState(spark, statePath)
     val isBench = pmod(col("doc_id"), lit(97L)) === 0
     val scored = graft.operators.Text.withBlocklist(
         graft.operators.Text.withRepetition(
@@ -2494,41 +2076,32 @@ object Streams {
       // the #193 blocklist stage — stateless like 1-3, so its partial
       // stays batch-additive
       .withColumn("p4", col("p3") && col("bl_pass"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .persist(MEMORY_AND_DISK)
     try {
-      scored.agg(
-          count(lit(1)).as("c0"),
-          coalesce(sum(col("p1").cast("long")), lit(0L)).as("c1"),
-          coalesce(sum(col("p2").cast("long")), lit(0L)).as("c2"),
-          coalesce(sum(col("p3").cast("long")), lit(0L)).as("c3"),
-          coalesce(sum(col("p4").cast("long")), lit(0L)).as("c4"))
-        .write.mode("overwrite")
-        .parquet(new Path(root, s"counts/batch=$batchId").toString)
-      scored.where(col("p4"))
+      st.put("counts", batchId, scored.agg(
+        count(lit(1)).as("c0"),
+        coalesce(sum(col("p1").cast("long")), lit(0L)).as("c1"),
+        coalesce(sum(col("p2").cast("long")), lit(0L)).as("c2"),
+        coalesce(sum(col("p3").cast("long")), lit(0L)).as("c3"),
+        coalesce(sum(col("p4").cast("long")), lit(0L)).as("c4")))
+      st.put("funnel_fps", batchId, scored.where(col("p4"))
         .groupBy("fp").agg(
-          count(lit(1)).as("cnt"), min("doc_id").as("min_id"))
-        .write.mode("overwrite")
-        .parquet(new Path(root, s"funnel_fps/batch=$batchId").toString)
-      scored.where(isBench)
+          count(lit(1)).as("cnt"), min("doc_id").as("min_id")))
+      st.put("bench", batchId, scored.where(isBench)
         .select(explode(expr("word_shingle_hashes(text, 3)")).as("lk"))
-        .distinct()
-        .write.mode("overwrite")
-        .parquet(new Path(root, s"bench/batch=$batchId").toString)
+        .distinct())
       // vocabulary accumulated UP TO AND INCLUDING this batch (the
       // write above landed first, so a re-run reads the same set)
-      val vocab = spark.read
-        .parquet(new Path(root, "bench").toString)
+      val vocab = st.read("bench").get
         .where(col("batch") <= batchId)
         .agg(collect_set(col("lk")).as("_vocab"))
-      scored.where(col("p4") && !isBench)
+      st.put("verdicts", batchId, scored.where(col("p4") && !isBench)
         .crossJoin(broadcast(vocab))
         .select(col("doc_id"),
           (size(array_intersect(
             expr("word_shingle_hashes(text, 3)"),
             col("_vocab"))).cast("long") >=
-            graft.operators.Corpus.ContaminationK).as("contaminated"))
-        .write.mode("overwrite")
-        .parquet(new Path(root, s"verdicts/batch=$batchId").toString)
+            graft.operators.Corpus.ContaminationK).as("contaminated")))
     } finally scored.unpersist()
   }
 
@@ -2536,24 +2109,20 @@ object Streams {
     * column-for-column the batch `q_curation_funnel` schema. None
     * before the first batch.
     */
-  def curationFunnelState(spark: org.apache.spark.sql.SparkSession,
+  def curationFunnelState(spark: SparkSession,
       statePath: String): Option[DataFrame] = {
-    import org.apache.hadoop.fs.Path
-    val root = new Path(new Path(statePath).toUri.getPath)
-    val croot = new Path(root, "counts")
-    val fs = croot.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(croot)) return None
+    val st = BatchState(spark, statePath)
+    val croot = st.find("counts").getOrElse(return None)
     // mergeSchema: a store RESUMED across the blocklist upgrade holds
     // old c0-c3 batches NEXT TO new c0-c4 ones, and a single-file
     // schema pick could mask the legacy half entirely
-    val raw = spark.read.option("mergeSchema", "true")
-      .parquet(croot.toString)
+    val raw = spark.read.option("mergeSchema", "true").parquet(croot)
     // a counts store written (wholly or partly) BEFORE the #193
     // blocklist stage lacks c4 rows; silently treating them as 0 (or
     // letting sum skip their NULLs) would report an unscreened history
     // as screened AND mix stage-3 with stage-4 fps survivors — fail
-    // loudly instead (the funnel_fps-migration discipline: replay the
-    // stream into a fresh statePath to upgrade)
+    // loudly instead (replay the stream into a fresh statePath to
+    // upgrade)
     require(raw.columns.contains("c4"),
       s"$croot predates the blocklist funnel stage (no c4 column) — " +
         "replay the stream into a fresh statePath to upgrade")
@@ -2567,23 +2136,13 @@ object Streams {
         coalesce(sum("c2"), lit(0L)).as("c2"),
         coalesce(sum("c3"), lit(0L)).as("c3"),
         coalesce(sum("c4"), lit(0L)).as("c4"))
-    // read path: legacy funnel-schema fps/ is consumed IN PLACE (no
-    // rename — this is a readout; only applyCurationFunnelBatch,
-    // the write path, migrates)
-    val fproot = resolveFunnelFps(spark, root)
-    val canon =
-      if (!fs.exists(fproot))
-        spark.range(0).select(col("id").as("gmin"))
-      else spark.read.parquet(fproot.toString)
-        .groupBy("fp").agg(min("min_id").as("gmin"))
-        .select("gmin")
-    val vroot = new Path(root, "verdicts")
-    val verdicts =
-      if (!fs.exists(vroot))
-        spark.range(0).select(col("id").as("doc_id"),
-          lit(false).as("contaminated"))
-      else spark.read.parquet(vroot.toString)
-        .select("doc_id", "contaminated")
+    val canon = st.read("funnel_fps")
+      .map(_.groupBy("fp").agg(min("min_id").as("gmin")).select("gmin"))
+      .getOrElse(spark.range(0).select(col("id").as("gmin")))
+    val verdicts = st.read("verdicts")
+      .map(_.select("doc_id", "contaminated"))
+      .getOrElse(spark.range(0).select(col("id").as("doc_id"),
+        lit(false).as("contaminated")))
     val c56 = canon
       .join(verdicts, canon("gmin") === verdicts("doc_id"), "left")
       .agg(count(lit(1)).as("c5"),
@@ -2637,7 +2196,7 @@ object Streams {
     * #150 provisional-contamination caveat (a benchmark doc arriving
     * AFTER a survivor cannot retro-contaminate it — bench-first
     * delivery restores exact equality, spec-pinned). Replay is a
-    * fixpoint: every store is overwrite-by-batchId.
+    * fixpoint (the [[graft.sinks.Sinks.foldSink]] layout).
     *
     * A doc re-ingested bit-identically collapses in the readout's
     * distinct; same-id different-content re-crawls are #121's job
@@ -2646,18 +2205,10 @@ object Streams {
   def trainingManifestSink(docs: DataFrame, statePath: String,
       checkpointDir: String, idCol: String = "doc_id",
       textCol: String = "text", langCol: String = "lang",
-      sourceCol: String = "source")
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
-    require(idCol != "batch",
-      "trainingManifestSink stores state under batch=<id> partitions; " +
-        "an id column named 'batch' would collide with partition " +
-        "discovery — rename it first")
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyTrainingManifestBatch(batch, batchId, statePath, idCol,
-          textCol, langCol, sourceCol)
-      }
+      sourceCol: String = "source"): DataStreamWriter[Row] = {
+    BatchState.requireNoBatchColumn("trainingManifestSink", idCol)
+    foldSink(docs, checkpointDir)(applyTrainingManifestBatch(_, _,
+      statePath, idCol, textCol, langCol, sourceCol))
   }
 
   /** One maintenance step of [[trainingManifestSink]] (package-visible
@@ -2666,9 +2217,6 @@ object Streams {
   private[graft] def applyTrainingManifestBatch(batch: DataFrame,
       batchId: Long, statePath: String, idCol: String, textCol: String,
       langCol: String, sourceCol: String): Unit = {
-    import org.apache.hadoop.fs.Path
-    val spark = batch.sparkSession
-    val root = new Path(new Path(statePath).toUri.getPath)
     val b = batch.select(col(idCol).as("doc_id"), col(textCol).as("text"),
       col(langCol).as("lang"), col(sourceCol).as("source")).persist()
     try {
@@ -2687,13 +2235,12 @@ object Streams {
           col("quality_score") >= graft.operators.Corpus.FunnelQualityTau)
         .withColumn("p3", col("p2") && !col("is_repetitive"))
         .withColumn("p4", col("p3") && col("bl_pass"))
-      scored.where(col("p4") && pmod(col("doc_id"), lit(97L)) =!= 0)
-        .select(col("doc_id"), col("source"),
-          coalesce(graft.operators.Text.wsTokenCount, lit(0L))
-            .as("n_tokens"),
-          graft.operators.Dedup.contentFp.as("fp"))
-        .write.mode("overwrite")
-        .parquet(new Path(root, s"manifest_docs/batch=$batchId").toString)
+      BatchState(batch.sparkSession, statePath).put("manifest_docs", batchId,
+        scored.where(col("p4") && pmod(col("doc_id"), lit(97L)) =!= 0)
+          .select(col("doc_id"), col("source"),
+            coalesce(graft.operators.Text.wsTokenCount, lit(0L))
+              .as("n_tokens"),
+            graft.operators.Dedup.contentFp.as("fp")))
     } finally b.unpersist()
   }
 
@@ -2704,39 +2251,31 @@ object Streams {
     * stores the sink maintains; the layout/packing/mixture tail is
     * the SHARED batch code.
     */
-  def trainingManifestState(spark: org.apache.spark.sql.SparkSession,
+  def trainingManifestState(spark: SparkSession,
       statePath: String): Option[DataFrame] = {
-    import org.apache.hadoop.fs.Path
-    val root = new Path(new Path(statePath).toUri.getPath)
-    val mroot = new Path(root, "manifest_docs")
-    val fs = mroot.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(mroot)) return None
+    val st = BatchState(spark, statePath)
     // bit-identical re-ingest collapses here (the doc projection is
     // content-derived, so the replayed row is equal); same-id
     // different-content re-crawls are out of contract (#121)
-    val docs = spark.read.parquet(mroot.toString)
+    val docs = st.read("manifest_docs").getOrElse(return None)
       .select("doc_id", "source", "n_tokens", "fp").distinct()
     // exact-dedup canonical: global min surviving id per fingerprint,
     // from the funnel's stage-4 contraction — computed over ALL
     // stage-4 passers (benchmark docs included, exactly like the
     // batch keep_id window; a bench canonical correctly kills its
     // non-bench twins)
-    val fproot = resolveFunnelFps(spark, root)
-    val canon = spark.read.parquet(fproot.toString)
+    val canon = st.read("funnel_fps").get
       .groupBy("fp").agg(min("min_id").as("gmin"))
     // provisional contamination verdicts (the #150 caveat)
-    val vroot = new Path(root, "verdicts")
-    val contam =
-      if (!fs.exists(vroot))
-        spark.range(0).select(col("id").as("doc_id"))
-      else spark.read.parquet(vroot.toString)
-        .where(col("contaminated")).select("doc_id").distinct()
-    val labels = latestLabels(spark, fs, new Path(root, "labels"))
+    val contam = st.read("verdicts")
+      .map(_.where(col("contaminated")).select("doc_id").distinct())
+      .getOrElse(spark.range(0).select(col("id").as("doc_id")))
+    val labels = st.latest("labels")
       .map(_.select(col("id").as("doc_id"),
         col("component_id").as("cluster_id")))
       .getOrElse(spark.range(0).select(col("id").as("doc_id"),
         col("id").as("cluster_id")))
-    val keepers = keeperState(spark, statePath)
+    val keepers = st.latest("keepers")
       .map(_.select(col("cluster_id"), col("keeper_id")))
       .getOrElse(spark.range(0).select(col("id").as("cluster_id"),
         col("id").as("keeper_id")))
@@ -2766,7 +2305,8 @@ object Streams {
   /** #155 — `stream_mix_plan` / `mixPlanSink`: the #141 source-mixture
     * plan maintained while the corpus ARRIVES. Per batch, ONE
     * stratum-grain integer partial — (stratum, docs, tokens) — lands
-    * replay-safely under `mix/batch=<id>`; [[mixPlanState]] sums the
+    * under `mix/batch=<id>` (the [[graft.sinks.Sinks.foldSink]]
+    * layout); [[mixPlanState]] sums the
     * partials (integer-additive under any batch split) and applies
     * the SHARED [[graft.operators.Corpus.mixPlanFromTotals]] tail.
     * Unlike the dedup-family twins there is NO provisional caveat:
@@ -2776,49 +2316,40 @@ object Streams {
     */
   def mixPlanSink(docs: DataFrame, statePath: String,
       checkpointDir: String, stratumCol: String = "source",
-      tokensCol: String = "n_tokens")
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
-    require(stratumCol != "batch",
-      "mixPlanSink stores state under batch=<id> partitions; a stratum " +
-        "column named 'batch' would collide with partition discovery")
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyMixPlanBatch(batch, batchId, statePath, stratumCol, tokensCol)
-      }
+      tokensCol: String = "n_tokens"): DataStreamWriter[Row] = {
+    BatchState.requireNoBatchColumn("mixPlanSink", stratumCol)
+    foldSink(docs, checkpointDir)(applyMixPlanBatch(_, _, statePath,
+      stratumCol, tokensCol))
   }
 
   /** One partial step of [[mixPlanSink]] (package-visible for replay
     * in the spec).
     */
   private[graft] def applyMixPlanBatch(batch: DataFrame, batchId: Long,
-      statePath: String, stratumCol: String, tokensCol: String): Unit = {
-    import org.apache.hadoop.fs.Path
-    val root = new Path(new Path(statePath).toUri.getPath)
-    batch
+      statePath: String, stratumCol: String, tokensCol: String): Unit =
+    BatchState(batch.sparkSession, statePath).put("mix", batchId, batch
       .groupBy(col(stratumCol).as("stratum"))
       .agg(count(lit(1)).as("docs"),
-        coalesce(sum(tokensCol), lit(0L)).as("tokens"))
-      .write.mode("overwrite")
-      .parquet(new Path(root, s"mix/batch=$batchId").toString)
-  }
+        coalesce(sum(tokensCol), lit(0L)).as("tokens")))
+
+  /** The summed `(stratum, docs, tokens)` partials both mixture
+    * readouts plan from; None before the first batch.
+    */
+  private def mixTotals(spark: SparkSession, statePath: String,
+      stratumCol: String): Option[DataFrame] =
+    BatchState(spark, statePath).read("mix").map(_
+      .groupBy(col("stratum").as(stratumCol))
+      .agg(sum("docs").as("docs"), sum("tokens").as("tokens")))
 
   /** The mixture plan over everything delivered so far — EXACTLY the
     * batch `Graft.mixPlan` on the union of all micro-batches. None
     * before the first batch.
     */
-  def mixPlanState(spark: org.apache.spark.sql.SparkSession,
+  def mixPlanState(spark: SparkSession,
       statePath: String, budget: Long,
-      stratumCol: String = "source"): Option[DataFrame] = {
-    import org.apache.hadoop.fs.Path
-    val mroot = new Path(new Path(statePath).toUri.getPath, "mix")
-    val fs = mroot.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(mroot)) return None
-    val totals = spark.read.parquet(mroot.toString)
-      .groupBy(col("stratum").as(stratumCol))
-      .agg(sum("docs").as("docs"), sum("tokens").as("tokens"))
-    Some(graft.operators.Corpus.mixPlanFromTotals(totals, stratumCol, budget))
-  }
+      stratumCol: String = "source"): Option[DataFrame] =
+    mixTotals(spark, statePath, stratumCol).map(
+      graft.operators.Corpus.mixPlanFromTotals(_, stratumCol, budget))
 
   /** #206 — `stream_mix_alpha`: the α-GENERAL mixture plan over the
     * SAME ingest fold as #155 (r17 verdict item 3). [[mixPlanSink]]'s
@@ -2835,21 +2366,14 @@ object Streams {
     * order; integer sums are order-free). None before the first
     * batch.
     */
-  def mixAlphaState(spark: org.apache.spark.sql.SparkSession,
+  def mixAlphaState(spark: SparkSession,
       statePath: String, alpha: Double, budget: Long,
       stratumCol: String = "source"): Option[DataFrame] = {
     require(alpha > 0 && alpha <= 1.0,
       s"alpha must be in (0, 1], got $alpha — 1 is natural sampling, " +
         "smaller flattens toward uniform")
-    import org.apache.hadoop.fs.Path
-    val mroot = new Path(new Path(statePath).toUri.getPath, "mix")
-    val fs = mroot.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(mroot)) return None
-    val totals = spark.read.parquet(mroot.toString)
-      .groupBy(col("stratum").as(stratumCol))
-      .agg(sum("docs").as("docs"), sum("tokens").as("tokens"))
-    Some(graft.operators.Corpus.mixAlphaFromTotals(totals, stratumCol,
-      alpha, budget))
+    mixTotals(spark, statePath, stratumCol).map(
+      graft.operators.Corpus.mixAlphaFromTotals(_, stratumCol, alpha, budget))
   }
 
   /** #210 — `stream_token_quantiles` / `tokenQuantilesSink`: the
@@ -2859,7 +2383,8 @@ object Streams {
     * streaming percentile is normally a sketch (#63's KLL shape):
     * token counts are SMALL INTEGERS, so the full distribution is a
     * countable histogram — per batch ONE `(source, n_tokens, n)`
-    * integer contraction lands replay-safely under `hist/batch=<id>`,
+    * integer contraction lands under `hist/batch=<id>` (the
+    * [[graft.sinks.Sinks.foldSink]] layout),
     * partials sum under ANY batch split, and [[graft.operators.Corpus
     * .tokenQuantilesFromHist]] replays Spark's `percentile`
     * interpolation verbatim over the summed histogram — the readout
@@ -2873,87 +2398,59 @@ object Streams {
     * genuinely continuous measures need the #63 sketch.
     */
   def tokenQuantilesSink(docs: DataFrame, statePath: String,
-      checkpointDir: String)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyTokenQuantilesBatch(batch, batchId, statePath)
-      }
+      checkpointDir: String): DataStreamWriter[Row] =
+    foldSink(docs, checkpointDir)(applyTokenQuantilesBatch(_, _, statePath))
 
   /** One partial step of [[tokenQuantilesSink]] (package-visible so
     * the spec can drive replay directly). */
   private[graft] def applyTokenQuantilesBatch(batch: DataFrame,
-      batchId: Long, statePath: String): Unit = {
-    import org.apache.hadoop.fs.Path
-    val root = new Path(new Path(statePath).toUri.getPath)
-    batch
+      batchId: Long, statePath: String): Unit =
+    BatchState(batch.sparkSession, statePath).put("hist", batchId, batch
       .select(col("source"), graft.operators.Text.wsTokenCount.as("n_tokens"))
       .groupBy("source", "n_tokens")
-      .agg(count(lit(1)).as("n"))
-      .write.mode("overwrite")
-      .parquet(new Path(root, s"hist/batch=$batchId").toString)
-  }
+      .agg(count(lit(1)).as("n")))
 
   /** The per-source quantile dashboard over everything delivered —
     * EXACTLY the batch `q_token_quantiles` on the union of all
     * micro-batches. None before the first batch.
     */
-  def tokenQuantilesState(spark: org.apache.spark.sql.SparkSession,
-      statePath: String): Option[DataFrame] = {
-    import org.apache.hadoop.fs.Path
-    val hroot = new Path(new Path(statePath).toUri.getPath, "hist")
-    val fs = hroot.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(hroot)) return None
-    Some(graft.operators.Corpus.tokenQuantilesFromHist(
-      spark.read.parquet(hroot.toString)
-        .groupBy("source", "n_tokens").agg(sum("n").as("n"))))
-  }
+  def tokenQuantilesState(spark: SparkSession,
+      statePath: String): Option[DataFrame] =
+    BatchState(spark, statePath).read("hist").map(hist =>
+      graft.operators.Corpus.tokenQuantilesFromHist(
+        hist.groupBy("source", "n_tokens").agg(sum("n").as("n"))))
 
   /** #156 — `stream_token_fertility` / `tokenFertilitySink`: the #148
     * tokenizer-fertility dashboard maintained at ingest. Per batch,
     * one (lang, source) integer partial (docs, chars, bytes, ws/bpe
-    * token counts — additive) under `fert/batch=<id>`;
+    * token counts — additive) under `fert/batch=<id>` (the
+    * [[graft.sinks.Sinks.foldSink]] layout);
     * [[tokenFertilityState]] sums the partials and applies the SHARED
     * ratio tail. Like the mixture-plan fold, EXACT under any batch
     * boundaries — nothing depends on arrival order. Per-batch state
     * is |langs|·|sources| rows.
     */
   def tokenFertilitySink(docs: DataFrame, statePath: String,
-      checkpointDir: String)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyTokenFertilityBatch(batch, batchId, statePath)
-      }
+      checkpointDir: String): DataStreamWriter[Row] =
+    foldSink(docs, checkpointDir)(applyTokenFertilityBatch(_, _, statePath))
 
   /** One partial step of [[tokenFertilitySink]]. */
   private[graft] def applyTokenFertilityBatch(batch: DataFrame,
-      batchId: Long, statePath: String): Unit = {
-    import org.apache.hadoop.fs.Path
-    val root = new Path(new Path(statePath).toUri.getPath)
-    graft.operators.Text.tokenFertilityTotals(batch)
-      .write.mode("overwrite")
-      .parquet(new Path(root, s"fert/batch=$batchId").toString)
-  }
+      batchId: Long, statePath: String): Unit =
+    BatchState(batch.sparkSession, statePath).put("fert", batchId,
+      graft.operators.Text.tokenFertilityTotals(batch))
 
   /** The fertility dashboard over everything delivered — EXACTLY the
     * batch `q_token_fertility` on the union. None before any batch.
     */
-  def tokenFertilityState(spark: org.apache.spark.sql.SparkSession,
-      statePath: String): Option[DataFrame] = {
-    import org.apache.hadoop.fs.Path
-    val froot = new Path(new Path(statePath).toUri.getPath, "fert")
-    val fs = froot.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(froot)) return None
-    Some(graft.operators.Text.tokenFertilityFromTotals(
-      spark.read.parquet(froot.toString)
+  def tokenFertilityState(spark: SparkSession,
+      statePath: String): Option[DataFrame] =
+    BatchState(spark, statePath).read("fert").map(fert =>
+      graft.operators.Text.tokenFertilityFromTotals(fert
         .groupBy("lang", "source")
         .agg(sum("docs").as("docs"), sum("chars").as("chars"),
           sum("bytes").as("bytes"), sum("ws_tokens").as("ws_tokens"),
           sum("bpe_tokens").as("bpe_tokens"))))
-  }
 
   /** #173 — `stream_bpe_fertility` / `bpeFertilitySink`: the REAL-
     * tokenizer fertility dashboard maintained at ingest, with a
@@ -2964,7 +2461,8 @@ object Streams {
     * refitting, so ingest and the periodic batch readout can never
     * disagree about what a token is. Per batch ONE (lang, source)
     * integer partial — docs, alpha words, REAL subword tokens —
-    * lands replay-safely under `bpe_fert/batch=<id>`;
+    * lands under `bpe_fert/batch=<id>` (the
+    * [[graft.sinks.Sinks.foldSink]] layout);
     * [[bpeFertilityState]] sums the partials (integer-additive under
     * ANY batch split, because the frozen merges make the encode a
     * pure per-word function) and applies the SHARED ratio tail —
@@ -2975,61 +2473,33 @@ object Streams {
     */
   def bpeFertilitySink(docs: DataFrame,
       merges: Seq[(String, String)], statePath: String,
-      checkpointDir: String)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyBpeFertilityBatch(batch, batchId, statePath, merges)
-      }
+      checkpointDir: String): DataStreamWriter[Row] =
+    foldSink(docs, checkpointDir)(applyBpeFertilityBatch(_, _, statePath,
+      merges))
 
   /** One partial step of [[bpeFertilitySink]]. */
   private[graft] def applyBpeFertilityBatch(batch: DataFrame,
       batchId: Long, statePath: String,
       merges: Seq[(String, String)]): Unit = {
-    import org.apache.hadoop.fs.Path
-    val root = new Path(new Path(statePath).toUri.getPath)
     if (batch.isEmpty) return
-    graft.operators.Bpe.bpeFertilityTotals(batch, merges)
-      .write.mode("overwrite")
-      .parquet(new Path(root, s"bpe_fert/batch=$batchId").toString)
+    BatchState(batch.sparkSession, statePath).put("bpe_fert", batchId,
+      graft.operators.Bpe.bpeFertilityTotals(batch, merges))
   }
 
   /** The frozen-merge fertility dashboard over everything delivered —
     * EXACTLY the batch aggregate on the union. None before any batch.
     */
-  def bpeFertilityState(spark: org.apache.spark.sql.SparkSession,
-      statePath: String): Option[DataFrame] = {
-    import org.apache.hadoop.fs.Path
-    val froot = new Path(new Path(statePath).toUri.getPath, "bpe_fert")
-    val fs = froot.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(froot)) return None
-    Some(graft.operators.Bpe.bpeFertilityFromTotals(
-      spark.read.parquet(froot.toString)
+  def bpeFertilityState(spark: SparkSession,
+      statePath: String): Option[DataFrame] =
+    BatchState(spark, statePath).read("bpe_fert").map(fert =>
+      graft.operators.Bpe.bpeFertilityFromTotals(fert
         .groupBy("lang", "source")
         .agg(sum("docs").as("docs"),
           sum("alpha_words").as("alpha_words"),
           sum("bpe_tokens").as("bpe_tokens"))))
-  }
 
   /** The labeling after the last completed batch, if any. */
-  def dupClusterState(spark: org.apache.spark.sql.SparkSession,
-      statePath: String): Option[DataFrame] = {
-    import org.apache.hadoop.fs.Path
-    val labelsRoot = new Path(new Path(statePath).toUri.getPath, "labels")
-    val fs = labelsRoot.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    latestLabels(spark, fs, labelsRoot)
-  }
-
-  private def versionOf(dirName: String): Option[Long] =
-    if (dirName.startsWith("v=")) dirName.drop(2).toLongOption else None
-
-  private def latestLabels(spark: org.apache.spark.sql.SparkSession,
-      fs: org.apache.hadoop.fs.FileSystem,
-      labelsRoot: org.apache.hadoop.fs.Path): Option[DataFrame] =
-    if (!fs.exists(labelsRoot)) None
-    else fs.listStatus(labelsRoot).toSeq
-      .flatMap(s => versionOf(s.getPath.getName).map(_ -> s.getPath))
-      .sortBy(_._1).lastOption
-      .map { case (_, p) => spark.read.parquet(p.toString) }
+  def dupClusterState(spark: SparkSession,
+      statePath: String): Option[DataFrame] =
+    BatchState(spark, statePath).latest("labels")
 }

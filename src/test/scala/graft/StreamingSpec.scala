@@ -2418,4 +2418,152 @@ class StreamingSpec extends SparkSpec {
     assert(got.exceptAll(want).count() == 0 && want.exceptAll(got).count() == 0,
       "streamed chunking differs from the batch run")
   }
+
+  /** One row per fold-sink step: `step(statePath, batchId)` lands one
+    * small batch through the sink's own step function, `readout` is
+    * the sink's public readout, and `unwritten` holds for the readout
+    * of a statePath no batch ever touched.
+    */
+  private case class FoldStep(name: String, step: (String, Long) => Unit,
+      readout: String => Option[DataFrame], unwritten: String => Boolean)
+
+  /** A row whose readout is None before the first batch. */
+  private def foldStep(name: String, step: (String, Long) => Unit,
+      readout: String => Option[DataFrame]): FoldStep =
+    FoldStep(name, step, readout, st => readout(st).isEmpty)
+
+  test("every fold sink: a replayed batch id leaves the readout unchanged; unwritten state reads as None") {
+    import spark.implicits._
+    import Streams._
+    graft.functions.UsableVec.register(spark)
+    graft.functions.PolyHashStr.register(spark)
+    // planted exact copies (ids past the corpus) make every dedup-shaped
+    // readout non-empty, so no row's replay check is vacuous
+    val docs0 = Tables.documents(spark, sfTiny)
+      .select("doc_id", "text", "lang", "source")
+    val docs = docs0.unionByName(docs0.orderBy("doc_id").limit(3)
+        .withColumn("doc_id", col("doc_id") + 1000000L))
+      .localCheckpoint(true)
+    val idText = docs.select("doc_id", "text")
+    val toks = docs.select(col("doc_id"), col("source"),
+      graft.operators.Text.wsTokenCount.as("n_tokens"))
+    val emb0 = Tables.embeddings(spark, sfTiny)
+      .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
+      .where(call_function("usable_vec", col("v"), lit(64)))
+    val emb = emb0.unionByName(emb0.orderBy("vec_id").limit(3)
+        .withColumn("vec_id", col("vec_id") + 1000000L))
+      .localCheckpoint(true)
+    val cents = graft.api.Graft.kmeansCentroids(emb, "vec_id", "v", 8, 2)
+      .localCheckpoint(true)
+    val books = graft.api.Graft.pqCodebooks(emb, "vec_id", "v",
+      dim = 64, m = 8, k = 8, iters = 2).localCheckpoint(true)
+    val sqBounds = graft.api.Graft.sqBounds(emb, "vec_id", "v", 64)
+      .localCheckpoint(true)
+    val ivfBounds = graft.api.Graft.ivfSqBounds(emb, "vec_id", "v",
+      cents, "cent_id", "cv", 64).localCheckpoint(true)
+    val lm = graft.api.Graft.unigramModel(docs, "text").localCheckpoint(true)
+    val probe = graft.api.Graft.qualityClassifierModel(docs, "doc_id", "text",
+      pmod(call_function("poly_hash", col("source")), lit(4L)) === 0)
+      .localCheckpoint(true)
+    val dsir = graft.api.Graft.dsirModel(docs, "text", col("lang") === "en")
+      .localCheckpoint(true)
+    val merges = graft.operators.Bpe.learnFromCorpus(spark, sfTiny)
+    val base = java.nio.file.Files.createTempDirectory("graft_folds_").toString
+    graft.sinks.Sinks.upsert(
+      Seq((1L, 1L, "alpha"), (2L, 1L, "beta")).toDF("sku_id", "ver", "sku_name"),
+      s"$base/dim", Seq("sku_id"), "ver")
+    val facts = Seq((100L, 1L), (101L, 2L), (102L, 3L)).toDF("order_id", "sku_id")
+    val snap = "fold_replay_snap"
+    val fps = docs.select(col("doc_id"), md5(col("text")).as("fp"))
+    val stored = fps.where(pmod(col("doc_id"), lit(5)) =!= 0)
+    spark.sql(s"DROP TABLE IF EXISTS $snap")
+    graft.api.Graft.writeSnapshot(stored, snap, "doc_id", buckets = 4,
+      overwrite = true)
+    val oldHist = graft.api.Graft.driftHistogram(
+      toks.where(pmod(col("doc_id"), lit(7)) =!= 0), "source", "n_tokens")
+    val budget = 1L << 20
+    val steps = Seq(
+      foldStep("dupCluster", (st, id) => applyDupClusterBatch(idText, id, st,
+        "doc_id", "text", 3, 0.8, Int.MaxValue), dupClusterState(spark, _)),
+      foldStep("keeperQuality", (st, id) => applyKeeperQualityBatch(idText,
+        id, st, "doc_id", "text", 3, 0.8, Int.MaxValue), keeperState(spark, _)),
+      foldStep("semantic", (st, id) => applySemanticBatch(emb, id, cents, st,
+        "vec_id", "v", 0.45), semanticDedupVerdicts(spark, _)),
+      foldStep("ivfBalance", (st, id) => applyIvfBalanceBatch(emb, id, cents,
+        st, "vec_id", "v"), ivfBalanceState(spark, _)),
+      foldStep("winnow", (st, id) => applyWinnowBatch(idText, id, st,
+        "doc_id", "text", graft.operators.Dedup.WinnowK,
+        graft.operators.Dedup.WinnowW, graft.operators.Dedup.WinnowTau,
+        graft.operators.Dedup.WinnowDfCap.toInt), winnowVerdicts(spark, _)),
+      foldStep("pqUsage", (st, id) => applyPqUsageBatch(emb, id, books, st,
+        "vec_id", "v"), pqUsageState(spark, _)),
+      foldStep("dimEnrich", (st, id) => applyDimEnrichBatch(facts, id,
+        s"$base/dim", st, "sku_id", "sku_id"), dimEnrichedState(spark, _)),
+      foldStep("ivfSq", (st, id) => applyIvfSqBatch(emb, id, cents, ivfBounds,
+        st, 64, "vec_id", "v", "cent_id", "cv", residual = true),
+        ivfSqIndexState(spark, _)),
+      foldStep("sqClip", (st, id) => applySqClipBatch(emb, id, sqBounds, 64, st,
+        "vec_id", "v"), sqClipState(spark, _)),
+      foldStep("cms", (st, id) => applyCmsBatch(idText, id, 4, 16, st, "text"),
+        cmsState(spark, _)),
+      FoldStep("corpusDiff", (st, id) => applyCorpusDiffBatch(fps, id, snap,
+          st, "doc_id", "fp"),
+        st => Some(corpusDiffSweep(spark, snap, st)),
+        // no batch: the empty new snapshot — every stored id `removed`
+        st => {
+          val sweep = corpusDiffSweep(spark, snap, st)
+          sweep.where(col("status") =!= "removed").isEmpty &&
+            sweep.count() == stored.count()
+        }),
+      FoldStep("corpusDrift", (st, id) => applyCorpusDriftBatch(toks, id, st,
+          "source", "n_tokens"),
+        st => Some(corpusDriftSweep(spark, oldHist, st)),
+        // no batch: the empty new snapshot — no new-side docs anywhere
+        st => corpusDriftSweep(spark, oldHist, st)
+          .agg(sum("docs_new")).head().getLong(0) == 0L),
+      foldStep("qualityLm", (st, id) => applyQualityLmBatch(idText, id, lm, st,
+        "doc_id", "text"), qualityLmScores(spark, _)),
+      foldStep("qualityClassifier", (st, id) => applyQualityClassifierBatch(
+        idText, id, probe, st, "doc_id", "text"),
+        qualityClassifierScores(spark, _)),
+      foldStep("dsir", (st, id) => applyDsirBatch(idText, id, dsir, st,
+        "doc_id", "text"), dsirWeightsSoFar(spark, _)),
+      foldStep("lineDedup", (st, id) => applyLineDedupBatch(idText, id, st,
+        "doc_id", "text"), lineDedupVerdicts(spark, _)),
+      foldStep("domainStats", (st, id) => applyDomainStatsBatch(
+        docs.select("doc_id", "text", "source"), id,
+        graft.operators.Corpus.DomainBlocklist, st, "doc_id", "text", "source",
+        graft.operators.Corpus.DomainQualityTau), domainStatsState(spark, _)),
+      foldStep("curationFunnel", (st, id) => applyCurationFunnelBatch(
+        docs.select("doc_id", "text", "lang"), id, st, "doc_id", "text",
+        "lang"), curationFunnelState(spark, _)),
+      foldStep("trainingManifest", (st, id) => applyTrainingManifestBatch(docs,
+        id, st, "doc_id", "text", "lang", "source"),
+        trainingManifestState(spark, _)),
+      foldStep("mixPlan", (st, id) => applyMixPlanBatch(toks, id, st,
+        "source", "n_tokens"), mixPlanState(spark, _, budget)),
+      foldStep("tokenQuantiles", (st, id) => applyTokenQuantilesBatch(
+        docs.select("doc_id", "source", "text"), id, st),
+        tokenQuantilesState(spark, _)),
+      foldStep("tokenFertility", (st, id) => applyTokenFertilityBatch(docs, id,
+        st), tokenFertilityState(spark, _)),
+      foldStep("bpeFertility", (st, id) => applyBpeFertilityBatch(docs, id, st,
+        merges), bpeFertilityState(spark, _)))
+    assert(steps.map(_.name).distinct.size == 23)
+    steps.foreach { fold =>
+      val st = s"$base/${fold.name}"
+      assert(fold.unwritten(st),
+        s"${fold.name}: unwritten state must read as None")
+      fold.step(st, 0L)
+      val first = fold.readout(st)
+        .getOrElse(fail(s"${fold.name}: no readout after a batch"))
+        .localCheckpoint(true)
+      assert(!first.isEmpty, s"${fold.name}: vacuous readout")
+      fold.step(st, 0L)
+      val again = fold.readout(st).get
+      assert(first.exceptAll(again).isEmpty && again.exceptAll(first).isEmpty,
+        s"${fold.name}: replaying batch 0 moved the readout")
+    }
+    spark.sql(s"DROP TABLE IF EXISTS $snap")
+  }
 }

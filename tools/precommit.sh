@@ -13,6 +13,19 @@
 set -euo pipefail
 cd "$(dirname "$0")/.."
 
+# Sink guard: the foreachBatch wrapper and state-path resolution live
+# in one place, sinks/Sinks.scala (foldSink, BatchState, qualified). A
+# hand-rolled `.foreachBatch` bypasses the replay contract, and
+# `toUri.getPath` drops a path's scheme and authority, so state meant
+# for another filesystem lands on the default one.
+if hits=$(grep -rn -e '\.foreachBatch' -e 'toUri\.getPath' src/main \
+    --include='*.scala' | grep -v '^src/main/scala/graft/sinks/Sinks\.scala:'); then
+  echo "$hits"
+  echo "[precommit] FAIL: use Sinks.foldSink / Sinks.BatchState instead." >&2
+  exit 1
+fi
+echo "[precommit] sink guard OK"
+
 echo "[precommit] sbt Test/compile ..."
 if ! sbt -batch Test/compile >/tmp/graft_precommit.log 2>&1; then
   tail -30 /tmp/graft_precommit.log
